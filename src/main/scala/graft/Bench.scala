@@ -30,6 +30,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * - `gc_ms` (full artifact) is each reported run's overlapped JVM GC
   *   time — the heap-pressure axis that explains cross-environment
   *   wall-time gaps without re-run archaeology.
+  * - `codegen_compiles` / `build_jobs` (full artifact), from the same
+  *   run: generated classes compiled (Spark's `CodegenMetrics`) and
+  *   Spark jobs run while the DataFrame was built (schema inference,
+  *   eager probes) — the per-query fixed costs a warm session should
+  *   not pay again.
   * - `scale` / `scale30` are derived-scale sweeps: queries re-timed
   *   at 10× and 30× data ([[graft.sources.ScaledCorpus]]),
   *   cheapest-first under a wall-clock budget with a per-query cap.
@@ -144,9 +149,11 @@ object Bench {
     "ta_boilerplate_scrub")).distinct
 
   /** One query's measurement: wall seconds (sentinel -1 timeout / -2
-    * error) plus the JVM-wide GC time the run overlapped.
+    * error) plus the JVM-wide GC time the run overlapped, the generated
+    * classes it compiled and the Spark jobs its DataFrame build ran.
     */
-  final case class Timing(sec: Double, gcMs: Long, errMsg: Option[String] = None)
+  final case class Timing(sec: Double, gcMs: Long, errMsg: Option[String] = None,
+                          compiles: Long = 0L, buildJobs: Long = 0L)
 
   /** Every knob, injectable: `main` builds one from the environment;
     * BenchSpec builds tiny ones (small registry subset, synthetic
@@ -313,19 +320,32 @@ object Bench {
                        name: String, dir: String, capSec: Int): Timing = {
     val fn = queries(name)
     val group = s"bench-$name"
+    val sc = spark.sparkContext
+    // counts the jobs submitted while the DataFrame is built, which
+    // carry the build property
+    val buildJobs = new java.util.concurrent.atomic.AtomicLong()
+    val buildListener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(BuildProp) == group)
+          buildJobs.incrementAndGet()
+    }
+    sc.addSparkListener(buildListener)
+    val compiles0 = compileCount
     val gc0 = totalGcMs
     val t0 = System.nanoTime()
     val runner = new Thread(() => {
       // job group is thread-local: set it on the thread that submits
-      spark.sparkContext.setJobGroup(group, name, interruptOnCancel = true)
-      fn(spark, dir).write.format("noop").mode("overwrite").save()
+      sc.setJobGroup(group, name, interruptOnCancel = true)
+      sc.setLocalProperty(BuildProp, group)
+      val df = try fn(spark, dir) finally sc.setLocalProperty(BuildProp, null)
+      df.write.format("noop").mode("overwrite").save()
     }, group)
     val err = new java.util.concurrent.atomic.AtomicReference[Throwable]()
     runner.setDaemon(true)
     runner.setUncaughtExceptionHandler((_, e) => err.set(e))
     runner.start()
     runner.join(capSec * 1000L)
-    if (runner.isAlive) {
+    val timing = if (runner.isAlive) {
       spark.sparkContext.cancelJobGroup(group)
       // a streaming query ignores job-group cancellation (it blocks in
       // awaitTermination, not in a job) — stop any active streams so a
@@ -347,7 +367,21 @@ object Bench {
       err.get.printStackTrace()
       Timing(-2.0, totalGcMs - gc0, Some(msg))
     } else Timing((System.nanoTime() - t0) / 1e9, totalGcMs - gc0)
+    // -1 marks a count the listener bus could not deliver in time
+    val drained =
+      try { org.apache.spark.ListenerBusDrain.drain(sc); true }
+      catch { case scala.util.control.NonFatal(_) => false }
+    sc.removeSparkListener(buildListener)
+    timing.copy(compiles = compileCount - compiles0,
+      buildJobs = if (drained) buildJobs.get else -1L)
   }
+
+  /** Local property naming the query whose DataFrame is being built. */
+  private val BuildProp = "graft.bench.build"
+
+  private def compileCount: Long =
+    org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount
 
   private def jsonDict(entries: Iterable[(String, Double)]): String =
     entries.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
@@ -485,8 +519,13 @@ object Bench {
         .map(name => name -> timedRun(spark, queries, name, dir, capSec))
 
     // Warm per-query codegen at the smallest SF: generated classes are
-    // cached by code shape, so a fast sf0.001 pass compiles every plan
-    // and the timed runs measure execution, not Janino.
+    // cached by code shape, so a fast sf0.001 pass compiles the plans
+    // and the timed runs measure execution, not Janino. That holds only
+    // while the classes of one pass fit Spark's codegen cache: the
+    // session's GraftSession.CodegenCacheEntries (1000) holds a
+    // headline pass (~200 classes) but not every class of a full
+    // registry pass, so the headline passes run warm and early
+    // registry queries may recompile (counted in codegen_compiles).
     if (cfg.warmCodegen) {
       val warmDir = new java.io.File(cfg.sfDir).getParent match {
         case null => cfg.sfDir
@@ -535,6 +574,8 @@ object Bench {
     }
     val results = picked.map { case (n, t) => n -> t.sec }
     val gcMs = picked.map { case (n, t) => n -> t.gcMs.toDouble }
+    def countsJson(f: Timing => Long): String =
+      picked.map { case (n, t) => "\"" + n + "\":" + f(t) }.mkString("{", ",", "}")
     val failed = results.collect { case (k, v) if v <= 0 => k }
     val timeAt01 = results.toMap
 
@@ -812,7 +853,7 @@ object Bench {
       // blow-up. Refuted flags skip the probe (nothing to explain).
       def outRows(name: String, dir: String): Long =
         try queries(name)(spark, dir).count()
-        catch { case _: Throwable => -1L }
+        catch { case scala.util.control.NonFatal(_) => -1L }
       val cliffJson = cliffs.sortBy(-_.ratio).map { c =>
         val rg =
           if (c.confirmed && !c.timedOut && deadlineLeft > 60) {
@@ -962,7 +1003,7 @@ object Bench {
     // FULL artifact: key order = truncation priority (big dicts first,
     // summary scalars last, so any tail of the line is self-contained)
     val full =
-      f"""{"queries":${jsonDict(results)},"gc_ms":${jsonDict(gcMs)},"headline_repeats":$hRepeats,"scale":${s10.json},"scale30":${s30.json},"scale100":${s100.json},"scale_oracle":$oracleJson,"headline_queries":${jsonDict(headlineResults)},"headline_fallback":${names(headlineFallback)},"bench_mode":"${cfg.mode}","cliffs_10x":${names(s10.flagged)},"cliffs_30x":${names(s30.flagged)},"cliffs_100x":${names(s100.flagged)},"cliffs_confirmed_10x":${names(s10.confirmed)},"cliffs_confirmed_30x":${names(s30.confirmed)},"cliffs_confirmed_100x":${names(s100.confirmed)},"cliffs_unadjudicated_10x":${names(s10.unadjudicated)},"cliffs_unadjudicated_30x":${names(s30.unadjudicated)},"cliffs_unadjudicated_100x":${names(s100.unadjudicated)},"cliffs_rechecked":$rechecksAll,"excluded_twins":${names(excludedTwins)},"excluded_sweep":${names(excludedSweep)},"null_models":${
+      f"""{"queries":${jsonDict(results)},"gc_ms":${jsonDict(gcMs)},"codegen_compiles":${countsJson(_.compiles)},"build_jobs":${countsJson(_.buildJobs)},"headline_repeats":$hRepeats,"scale":${s10.json},"scale30":${s30.json},"scale100":${s100.json},"scale_oracle":$oracleJson,"headline_queries":${jsonDict(headlineResults)},"headline_fallback":${names(headlineFallback)},"bench_mode":"${cfg.mode}","cliffs_10x":${names(s10.flagged)},"cliffs_30x":${names(s30.flagged)},"cliffs_100x":${names(s100.flagged)},"cliffs_confirmed_10x":${names(s10.confirmed)},"cliffs_confirmed_30x":${names(s30.confirmed)},"cliffs_confirmed_100x":${names(s100.confirmed)},"cliffs_unadjudicated_10x":${names(s10.unadjudicated)},"cliffs_unadjudicated_30x":${names(s30.unadjudicated)},"cliffs_unadjudicated_100x":${names(s100.unadjudicated)},"cliffs_rechecked":$rechecksAll,"excluded_twins":${names(excludedTwins)},"excluded_sweep":${names(excludedSweep)},"null_models":${
         nullModels.view.filterKeys(selected.contains).toSeq.sortBy(_._1)
           .map { case (n, v) => s""""$n":${jsonStr(v)}""" }
           .mkString("{", ",", "}")},"counts":$counts,"headline_stddev":$headlineStddev%.3f,"elapsed_sec":$globalElapsed%.1f,"deadline_sec":${cfg.deadlineSec}%.0f,"failed_detail":$failedDetail,"failed":${names(failed)},"total_all":$totalAll%.3f,"sf":"${cfg.sfDir}","metric":"total","unit":"sec","value":$headlineTotal%.3f}"""

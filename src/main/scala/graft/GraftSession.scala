@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import scala.util.control.NonFatal
+
 /** Canonical SparkSession builder for the engine — the one public
   * entrypoint a library user configures a session through. Centralizes
   * the confs the engine's semantics depend on, so every session
@@ -15,6 +17,7 @@ import org.apache.spark.sql.SparkSession
   *  - GraftExtensions: registers the engine's codegen'd Catalyst
   *    expressions (poly_hash64, minhash_sigs, packed_shingles,
   *    jaccard_sorted) as SQL functions.
+  *  - A 1000-entry generated-class cache (see [[CodegenCacheEntries]]).
   *
   * `spark.sql.shuffle.partitions` defaults to the cluster's core
   * count when given (local mode: pass the parallelism you run with —
@@ -22,6 +25,12 @@ import org.apache.spark.sql.SparkSession
   * cluster alike).
   */
 object GraftSession {
+
+  /** `spark.sql.codegen.cache.maxEntries` for every engine session. One
+    * headline pass needs ~200 generated classes, so Spark's default of
+    * 100 evicts and recompiles them on every pass.
+    */
+  val CodegenCacheEntries = 1000
 
   def builder(appName: String = "graft",
               master: Option[String] = None,
@@ -45,6 +54,7 @@ object GraftSession {
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         "262144")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
     val withMaster = master.fold(b)(b.master)
     shufflePartitions.fold(withMaster)(n =>
       withMaster.config("spark.sql.shuffle.partitions", n))
@@ -70,7 +80,9 @@ object GraftSession {
     try org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window",
       org.apache.logging.log4j.Level.ERROR)
-    catch { case _: Throwable => () } // logging backend is best-effort
+    catch { // logging backend is best-effort: tolerate a missing log4j-core
+      case NonFatal(_) | _: LinkageError => ()
+    }
     s
   }
 }

@@ -69,6 +69,14 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // the driver-side cost of the run's generated classes
+    val compiles =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val metaspaceMb = java.lang.management.ManagementFactory.getMemoryPoolMXBeans
+      .toArray(Array.empty[java.lang.management.MemoryPoolMXBean])
+      .filter(_.getName == "Metaspace").map(_.getUsage.getUsed).sum / 1048576.0
+    System.err.println(f"[verify] ${selected.size} queries: $compiles codegen " +
+      f"compiles, driver metaspace $metaspaceMb%.1f MB")
     spark.stop()
   }
 }

@@ -439,7 +439,7 @@ object Multimodal {
     */
   private def decodeImage(content: Array[Byte]): Option[java.awt.image.BufferedImage] =
     try Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(content)))
-    catch { case _: Throwable => None }
+    catch { case scala.util.control.NonFatal(_) => None }
 
   /** Per-channel pixel means rounded to 4 dp — the canonical "did the
     * decode really happen" feature (a header parse can't know them).

@@ -235,14 +235,17 @@ object Scd2Queries {
       (s, dir) => {
         import graft.sources.VersionedTable
         val base = java.nio.file.Files.createTempDirectory("graft_vt_").toString
-        val supp = Tables.table(s, dir, "supplier")
-          .select("s_suppkey", "s_name", "s_acctbal")
-        VersionedTable.write(supp, base, "initial_load", t0)
-        // compliance rule: remove non-positive balances (ref
-        // delta_audit_update.py:18 fare_amount > 0)
-        VersionedTable.write(supp.filter(col("s_acctbal") > 0), base,
-          "compliance_filter", t1)
-        VersionedTable.history(s, base)
+        try {
+          val supp = Tables.table(s, dir, "supplier")
+            .select("s_suppkey", "s_name", "s_acctbal")
+          VersionedTable.write(supp, base, "initial_load", t0)
+          // compliance rule: remove non-positive balances (ref
+          // delta_audit_update.py:18 fare_amount > 0)
+          VersionedTable.write(supp.filter(col("s_acctbal") > 0), base,
+            "compliance_filter", t1)
+          // two rows: materialized so the store can be removed now
+          Tables.collectLocal(VersionedTable.history(s, base))
+        } finally Tables.deletePath(s, base)
       },
       """SELECT CAST(1 AS INTEGER) AS version, 'initial_load' AS operation,
         |  (SELECT COUNT(*) FROM supplier) AS record_count,

@@ -143,15 +143,18 @@ object ValidationQueries {
     "wf_gate_roundtrip" -> QueryDef.sql(
       (s, dir) => {
         val base = java.nio.file.Files.createTempDirectory("graft_gate_").toString
-        val annotated = Validation.annotate(t(s, dir, "lineitem"), lineitemRules)
-        val m = Validation.metrics(annotated, lineitemRules,
-          runId = "run_002", jobName = "lineitem_validation", maxErrorRate = 0.5)
-        val worse = m
-          .withColumn("records_valid", lit(0L))
-          .withColumn("run_id", lit("run_001"))
-        graft.operators.MetricsGate.persistRun(worse, base, "run_001")
-        graft.operators.MetricsGate.persistRun(m, base, "run_002")
-        graft.operators.MetricsGate.evaluate(s, base)
+        try {
+          val annotated = Validation.annotate(t(s, dir, "lineitem"), lineitemRules)
+          val m = Validation.metrics(annotated, lineitemRules,
+            runId = "run_002", jobName = "lineitem_validation", maxErrorRate = 0.5)
+          val worse = m
+            .withColumn("records_valid", lit(0L))
+            .withColumn("run_id", lit("run_001"))
+          graft.operators.MetricsGate.persistRun(worse, base, "run_001")
+          graft.operators.MetricsGate.persistRun(m, base, "run_002")
+          // one row: materialized so the run store can be removed now
+          Tables.collectLocal(graft.operators.MetricsGate.evaluate(s, base))
+        } finally Tables.deletePath(s, base)
       },
       s"""WITH a AS (
          |  SELECT COUNT(*) AS records_read,

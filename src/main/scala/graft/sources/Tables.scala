@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
+import scala.util.control.NonFatal
+
 /** Readers/writers for the engine's zoned-lake layout.
   *
   * Re-expresses the reference's source/sink surface (SURVEY.md §2.1,
@@ -20,13 +22,82 @@ object Tables {
 
   /** S1: parquet scan. Column pruning + predicate pushdown are
     * handled by Catalyst; callers should NOT pre-materialize.
+    *
+    * The schema is resolved once per (session, path, inference confs,
+    * leaf-file snapshot) and later reads pass it to the reader, so they
+    * skip footer inference (a one-task Spark job per call). The snapshot
+    * lists every leaf file's name, length and mtime, so any rewrite of
+    * the path, through whatever writer, misses the cache: no sink needs
+    * to invalidate it. A miss returns the inferring read itself, so it
+    * costs one listing and nothing more. A path that cannot be listed
+    * (missing, a glob) takes the plain read and its error.
     */
   def parquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    SchemaCache.key(spark, path) match {
+      case None => spark.read.parquet(path)
+      case Some(key) => SchemaCache.get(spark, key) match {
+        case Some(schema) => spark.read.schema(schema).parquet(path)
+        case None =>
+          val df = spark.read.parquet(path)
+          SchemaCache.put(spark, key, df.schema)
+          df
+      }
+    }
+
+  /** Resolved parquet schemas, one bounded LRU map per session. Sessions
+    * are weak keys, so a stopped, unreferenced session is not kept alive.
+    */
+  private object SchemaCache {
+    private val MaxEntriesPerSession = 256
+    // confs that change what footer inference returns for the same files
+    private val inferenceConfs = Seq(
+      "spark.sql.legacy.parquet.nanosAsLong",
+      "spark.sql.parquet.inferTimestampNTZ.enabled",
+      "spark.sql.parquet.binaryAsString",
+      "spark.sql.parquet.int96AsTimestamp",
+      "spark.sql.parquet.mergeSchema",
+      "spark.sql.sources.partitionColumnTypeInference.enabled",
+      "spark.sql.caseSensitive")
+
+    /** (path, inference confs, digest of the leaf-file listing). */
+    final case class Key(path: String, confs: Seq[Option[String]], files: String)
+
+    private val bySession =
+      new java.util.WeakHashMap[SparkSession, java.util.LinkedHashMap[Key, StructType]]()
+
+    def key(spark: SparkSession, path: String): Option[Key] =
+      try {
+        val p = new org.apache.hadoop.fs.Path(path)
+        val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+        val md = java.security.MessageDigest.getInstance("SHA-256")
+        val it = fs.listFiles(p, true)
+        while (it.hasNext) {
+          val f = it.next()
+          md.update(s"${f.getPath}\u0000${f.getLen}/${f.getModificationTime}\n"
+            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        }
+        Some(Key(path, inferenceConfs.map(spark.conf.getOption),
+          java.util.Base64.getEncoder.encodeToString(md.digest())))
+      } catch { case NonFatal(_) => None }
+
+    def get(spark: SparkSession, key: Key): Option[StructType] = synchronized {
+      Option(bySession.get(spark)).flatMap(m => Option(m.get(key)))
+    }
+
+    def put(spark: SparkSession, key: Key, schema: StructType): Unit = synchronized {
+      bySession.computeIfAbsent(spark, _ =>
+        new java.util.LinkedHashMap[Key, StructType](16, 0.75f, true) {
+          override def removeEldestEntry(
+              e: java.util.Map.Entry[Key, StructType]): Boolean =
+            size() > MaxEntriesPerSession
+        }).put(key, schema)
+      ()
+    }
+  }
 
   /** Read one of the driver's testdata tables from an sf dir. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
 
   /** Floor the parallelism of a CPU-heavy per-row derivation
     * (optimization guide §2.5, input skew: "one huge unsplittable
@@ -109,11 +180,11 @@ object Tables {
     * elsewhere in the session are unaffected.
     */
   def readParquetAutoNanos(spark: SparkSession, path: String): DataFrame =
-    try spark.read.parquet(path)
+    try parquet(spark, path)
     catch {
-      case e: Throwable if mentionsNanos(e) =>
+      case NonFatal(e) if mentionsNanos(e) =>
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        spark.read.parquet(path)
+        parquet(spark, path)
     }
 
   private def mentionsNanos(e: Throwable): Boolean = {
@@ -383,6 +454,13 @@ object Tables {
     fs.delete(p, true)
     ()
   }
+
+  /** `df` collected into a driver-local frame with the same schema, so
+    * it no longer reads its source files: for results of a few rows
+    * whose scratch directory is deleted before they are returned.
+    */
+  def collectLocal(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
 
   /** Schema-evolution read: files in one directory may carry
     * different (compatible) footers as columns are added over a

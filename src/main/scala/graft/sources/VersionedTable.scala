@@ -62,10 +62,11 @@ object VersionedTable {
     spark.read.parquet(s"$base/v=$version")
 
   /** DESCRIBE HISTORY (`delta_audit_read.py:20`): one audit row per
-    * version, ascending.
+    * version, ascending. Reads the listed manifest dirs, not a glob: a
+    * glob read logs a FileNotFoundException WARN on every call.
     */
   def history(spark: SparkSession, base: String): DataFrame =
-    spark.read.json(s"$base/_history/v=*")
+    spark.read.json(versions(s"$base/_history").map(v => s"$base/_history/v=$v"): _*)
       .select(col("version").cast("int"), col("operation"),
         col("record_count").cast("long"),
         to_timestamp(col("run_timestamp")).as("run_timestamp"))

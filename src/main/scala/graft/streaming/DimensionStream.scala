@@ -59,8 +59,12 @@ object DimensionStream {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty) {
-          // asOf from the batch's own data: 1-row control-plane agg
-          val asOf = batch.agg(max(col("change_ts"))).head.getTimestamp(0)
+          // asOf from the batch's own data: 1-row control-plane agg.
+          // The cast reads a naive (TIMESTAMP_NTZ) change_ts, what
+          // pyarrow and pandas write by default, as a zoned timestamp;
+          // under the UTC session it keeps the wall-clock value.
+          val asOf = batch.agg(max(col("change_ts")).cast("timestamp"))
+            .head.getTimestamp(0)
           val target = spark.read.parquet(dimPath)
           val merged = Scd2.merge(target, batch.drop("change_ts"), conf, asOf)
           Scd2.writeAtomic(merged, dimPath)

@@ -73,6 +73,12 @@ class BenchSpec extends SparkSpec {
     assert(f.get("elapsed_sec").asDouble() < cfg.deadlineSec,
       s"run blew its deadline: ${f.get("elapsed_sec")}")
 
+    // per-query fixed-cost counts ride the reported run of every query;
+    // the synthetic query counts its input while it is built
+    for (k <- Seq("codegen_compiles", "build_jobs"); q <- cfg.selected)
+      assert(f.get(k).has(q) && f.get(k).get(q).asLong() >= 0, s"$k/$q: $full")
+    assert(f.get("build_jobs").get("synthetic_cliff").asLong() >= 1, full)
+
     // the synthetic superlinear query is flagged at 2× AND the flag
     // carries its own recheck verdict in the artifact
     val flagged10 = (0 until f.get("cliffs_10x").size())

@@ -518,7 +518,12 @@ class StreamingSpec extends SparkSpec {
     assert(s3 === expected)
   }
 
-  test("streaming SCD2 CDC merge equals the sequential batch merge chain") {
+  /** Feeds two CDC batches through `scd2MergeAvailableNow`, their
+    * `change_ts` written by `changeTs`, and checks the result against
+    * the sequential batch merge chain.
+    */
+  private def checkScd2Cdc(changeTs: java.sql.Timestamp => org.apache.spark.sql.Column,
+                           queryName: String): Unit = {
     import graft.operators.Scd2
     import graft.streaming.DimensionStream
     val conf = graft.queries.Scd2Queries.conf
@@ -535,12 +540,12 @@ class StreamingSpec extends SparkSpec {
 
     val root = java.nio.file.Files.createTempDirectory("scd2cdc").toString
     DimensionStream.writeFeedFile(
-      batchA.withColumn("change_ts", lit(t1)), s"$root/feed", "b0", 1700000000000L)
+      batchA.withColumn("change_ts", changeTs(t1)), s"$root/feed", "b0", 1700000000000L)
     DimensionStream.writeFeedFile(
-      batchB.withColumn("change_ts", lit(t2)), s"$root/feed", "b1", 1700000060000L)
+      batchB.withColumn("change_ts", changeTs(t2)), s"$root/feed", "b1", 1700000060000L)
     Scd2.writeAtomic(Scd2.initialLoad(b, conf, t0), s"$root/dim")
     val streamed = DimensionStream.scd2MergeAvailableNow(
-      spark, s"$root/feed", s"$root/dim", conf, queryName = "spec_scd2_cdc")
+      spark, s"$root/feed", s"$root/dim", conf, queryName = queryName)
 
     val expected = Scd2.merge(
       Scd2.merge(Scd2.initialLoad(b, conf, t0), batchA, conf, t1),
@@ -557,6 +562,15 @@ class StreamingSpec extends SparkSpec {
     // both-batch keys really reached version 3
     assert(streamed.filter(col("version_no") === 3).count() ===
       b.filter(col("s_suppkey") % 30 === 0).count())
+  }
+
+  test("streaming SCD2 CDC merge equals the sequential batch merge chain") {
+    checkScd2Cdc(t => lit(t), "spec_scd2_cdc")
+  }
+
+  test("streaming SCD2 CDC merge reads a naive (TIMESTAMP_NTZ) change_ts feed") {
+    // pyarrow and pandas write naive timestamps by default
+    checkScd2Cdc(t => lit(t).cast("timestamp_ntz"), "spec_scd2_cdc_ntz")
   }
 
   test("streaming MV (stateful stitch): out-of-order feed — drops measured exactly, within-batch mass intact") {

@@ -10,6 +10,97 @@ class TablesSpec extends SparkSpec {
 
   private def tmp() = java.nio.file.Files.createTempDirectory("tables").toString
 
+  /** `body`'s result and the number of Spark jobs started while it ran. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      val r = body
+      org.apache.spark.ListenerBusDrain.drain(sc)
+      (r, n.get)
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("parquet schema cache: a repeated read of an unchanged path runs no Spark job") {
+    val dir = tmp() + "/t"
+    Seq((1, "a"), (2, "b")).toDF("id", "s").write.parquet(dir)
+    // the job the cache saves: footer inference of a plain read
+    assert(jobsDuring(spark.read.parquet(dir))._2 > 0)
+    val first = Tables.parquet(spark, dir)
+    val (again, jobs) = jobsDuring(Tables.parquet(spark, dir))
+    assert(jobs === 0)
+    assert(again.schema === first.schema)
+    assert(again.as[(Int, String)].collect().sorted === Array((1, "a"), (2, "b")))
+  }
+
+  test("parquet schema cache: a path rewritten with an added column returns the new schema") {
+    val dir = tmp() + "/t"
+    Seq((1, "a")).toDF("id", "s").write.parquet(dir)
+    assert(Tables.parquet(spark, dir).columns === Array("id", "s"))
+    Seq((2, "b", 2.5)).toDF("id", "s", "x").write.mode("overwrite").parquet(dir)
+    val df = Tables.parquet(spark, dir)
+    assert(df.columns === Array("id", "s", "x"))
+    assert(df.as[(Int, String, Double)].collect() === Array((2, "b", 2.5)))
+  }
+
+  test("parquet schema cache: a partitioned path keeps its partition column") {
+    val dir = tmp() + "/t"
+    Tables.writePartitioned(
+      Seq((1, "2024-01-01"), (2, "2024-01-02")).toDF("id", "run_date"), dir, Seq("run_date"))
+    val first = Tables.parquet(spark, dir)
+    val (again, jobs) = jobsDuring(Tables.parquet(spark, dir))
+    assert(jobs === 0)
+    assert(again.schema === first.schema)
+    assert(again.columns === Array("id", "run_date"))
+    assert(again.filter($"run_date" === "2024-01-02").select("id").as[Int]
+      .collect() === Array(2))
+  }
+
+  test("parquet schema cache: a NANOS events file still reads through readParquetAutoNanos") {
+    import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64
+    import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
+    val dir = tmp()
+    val schema = Types.buildMessage()
+      .optional(INT64).named("event_id")
+      .optional(INT64)
+      .as(LogicalTypeAnnotation.timestampType(true, LogicalTypeAnnotation.TimeUnit.NANOS))
+      .named("ts")
+      .named("events")
+    val conf = new org.apache.hadoop.conf.Configuration()
+    GroupWriteSupport.setSchema(schema, conf)
+    val w = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(s"$dir/events.parquet"))
+      .withConf(conf).withType(schema).build()
+    val nanos = graft.functions.Functions.utcTimestamp("2024-02-01 00:00:00")
+      .getTime * 1000000L + 1000L
+    try {
+      val g = new org.apache.parquet.example.data.simple.SimpleGroup(schema)
+      g.add("event_id", 1L)
+      g.add("ts", nanos)
+      w.write(g)
+    } finally w.close()
+    val first = Tables.events(spark, dir)
+    val (again, jobs) = jobsDuring(Tables.events(spark, dir))
+    assert(jobs === 0)
+    Seq(first, again).foreach { df =>
+      assert(df.schema("ts").dataType === org.apache.spark.sql.types.TimestampType)
+      assert(df.select(col("ts").cast("string")).as[String].collect() ===
+        Array("2024-02-01 00:00:00.000001"))
+    }
+  }
+
+  test("parquet schema cache: a missing path still fails with Spark's own error") {
+    val missing = tmp() + "/missing"
+    val e = intercept[org.apache.spark.sql.AnalysisException](Tables.parquet(spark, missing))
+    assert(e.getCondition === "PATH_NOT_FOUND")
+  }
+
   test("partitioned write + latestPartition incremental read") {
     val dir = tmp() + "/t"
     val df = Seq((1, "2024-01-01"), (2, "2024-01-02"), (3, "2024-01-02"))
