@@ -127,10 +127,6 @@ object Functions {
   def exactSum(c: Column, scale: Int = 2): Column =
     sum(c.cast(s"decimal(30,$scale)")).cast("double")
 
-  /** Deterministic mean built from exactSum / count. */
-  def exactAvg(c: Column, scale: Int = 4): Column =
-    sum(c.cast(s"decimal(30,$scale)")).cast("double") / count(c)
-
   // ── exact-moment statistics ──────────────────────────────────────
   // The shared recipe behind every statistical query (correlation,
   // z-scores, outlier σ): accumulate EXACT decimal moments (n, Σx,

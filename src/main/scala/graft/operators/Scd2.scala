@@ -122,8 +122,6 @@ object Scd2 {
   def asOf(table: DataFrame, ts: java.sql.Timestamp): DataFrame =
     table.filter(col("effective_start_ts") <= lit(ts) && col("effective_end_ts") > lit(ts))
 
-  def currentView(table: DataFrame): DataFrame = table.filter(col("is_current"))
-
   /** J11: version history for one key, ordered. */
   def history(table: DataFrame, conf: Config, keyValues: Seq[Any]): DataFrame = {
     val pred = conf.keyCols.zip(keyValues)

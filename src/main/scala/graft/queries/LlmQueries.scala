@@ -594,8 +594,7 @@ object LlmQueries {
         // frame reads the dir LAZILY, so it can't be deleted here —
         // a fresh createTempDirectory per invocation leaked ~50 MB per
         // bench/verify repeat instead of reusing one footprint
-        val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_jsonl_rt_" +
-          Integer.toHexString(dir.hashCode)
+        val tmp = Tables.scratchDir("jsonl_rt", dir)
         val d = docs(s, dir)
         Tables.writeJsonl(d, tmp)
         Tables.readJsonl(s, tmp, Some(d.schema))
@@ -615,8 +614,7 @@ object LlmQueries {
     // re-derivation of the final lake state from the original table.
     "corpus_dynamic_overwrite" -> QueryDef.sql(
       (s, dir) => {
-        val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_dyn_ow_" +
-          Integer.toHexString(dir.hashCode)
+        val tmp = Tables.scratchDir("dyn_ow", dir)
         val d = docs(s, dir).select("doc_id", "lang", "n_chars")
         Tables.writePartitioned(d, tmp, Seq("lang"))
         Tables.withDynamicPartitionOverwrite(s) {
@@ -641,8 +639,7 @@ object LlmQueries {
     // "the max-lang slice" from the original table.
     "corpus_latest_partition" -> QueryDef.sql(
       (s, dir) => {
-        val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_latest_" +
-          Integer.toHexString(dir.hashCode)
+        val tmp = Tables.scratchDir("latest", dir)
         val d = docs(s, dir).select("doc_id", "lang", "source", "n_chars")
         Tables.writePartitioned(d, tmp, Seq("lang"))
         Tables.latestPartition(s, tmp, "lang")
@@ -2979,8 +2976,7 @@ object LlmQueries {
     // type drift in the ORC round-trip breaks the hash.
     "corpus_orc_roundtrip" -> QueryDef.sql(
       (s, dir) => {
-        val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_orc_rt_" +
-          Integer.toHexString(dir.hashCode)
+        val tmp = Tables.scratchDir("orc_rt", dir)
         Tables.writeOrc(docs(s, dir), tmp)
         Tables.readOrc(s, tmp)
           .groupBy("lang")
@@ -2998,8 +2994,7 @@ object LlmQueries {
     // quoting).
     "corpus_csv_roundtrip" -> QueryDef.sql(
       (s, dir) => {
-        val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_csv_rt_" +
-          Integer.toHexString(dir.hashCode)
+        val tmp = Tables.scratchDir("csv_rt", dir)
         val d = docs(s, dir)
         d.write.mode("overwrite")
           .option("header", "true").option("quoteAll", "true")
@@ -3029,8 +3024,9 @@ object LlmQueries {
     // strict subset. Sums go through decimal (exactSum) as everywhere.
     "corpus_file_skipping" -> QueryDef.sql(
       (s, dir) => {
-        val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_fskip_" +
-          Integer.toHexString(dir.hashCode)
+        // the table one level down: its stats index lands beside it,
+        // inside the scratch root
+        val tmp = Tables.scratchDir("fskip", dir) + "/table"
         Tables.table(s, dir, "lineitem")
           .repartitionByRange(8, col("l_shipdate"))
           .sortWithinPartitions(col("l_shipdate"))
@@ -3064,8 +3060,9 @@ object LlmQueries {
     // looked-up content.
     "corpus_bloom_lookup" -> QueryDef.sql(
       (s, dir) => {
-        val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_bloomix_" +
-          Integer.toHexString(dir.hashCode)
+        // the table one level down: its bloom index lands beside it,
+        // inside the scratch root
+        val tmp = Tables.scratchDir("bloomix", dir) + "/table"
         Tables.table(s, dir, "orders")
           .repartition(8, col("o_custkey"))
           .write.mode("overwrite").parquet(tmp)
@@ -3092,8 +3089,9 @@ object LlmQueries {
     // count preserved).
     "gov_lake_maintenance" -> QueryDef.sql(
       (s, dir) => {
-        val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_maint_" +
-          Integer.toHexString(dir.hashCode)
+        // the table one level down: its stats index lands beside it,
+        // inside the scratch root
+        val tmp = Tables.scratchDir("maint", dir) + "/table"
         Tables.deletePath(s, tmp)
         Tables.table(s, dir, "lineitem").repartition(64)
           .write.parquet(tmp)

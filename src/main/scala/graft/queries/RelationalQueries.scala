@@ -1005,11 +1005,8 @@ object RelationalQueries {
       (s, dir) => {
         import graft.operators.Incremental
         import graft.streaming.DimensionStream
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft_mv_stream_" +
-          Integer.toHexString(dir.hashCode)
-        val fs = new org.apache.hadoop.fs.Path(root)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(root), true)
+        val root = Tables.scratchDir("mv_stream", dir)
+        Tables.deletePath(s, root)
         val li = t(s, dir, "lineitem")
           .filter(col("l_extendedprice") > 0)
           .withColumn("ship_date", to_date(col("l_shipdate")))
@@ -1130,11 +1127,8 @@ object RelationalQueries {
     "cdc_stream_apply" -> QueryDef.sql(
       (s, dir) => {
         import graft.streaming.DimensionStream
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft_cdc_stream_" +
-          Integer.toHexString(dir.hashCode)
-        val fs = new org.apache.hadoop.fs.Path(root)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(root), true)
+        val root = Tables.scratchDir("cdc_stream", dir)
+        Tables.deletePath(s, root)
         val feedDir = s"$root/feed"
         val statePath = s"$root/state"
         val feed = graft.sources.Tables.events(s, dir).select(

@@ -65,13 +65,10 @@ object Scd2Queries {
   def streamMerged(s: SparkSession, dir: String): DataFrame = {
     import graft.streaming.DimensionStream
     val b = base(s, dir)
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_scd2_stream_" +
-      Integer.toHexString(dir.hashCode)
+    val root = Tables.scratchDir("scd2_stream", dir)
     val feedDir = s"$root/feed"
     val dimPath = s"$root/dim"
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    Tables.deletePath(s, root)
     val batchA = b.filter(col("s_suppkey") % 10 === 0)
       .withColumn("bal", (col("bal") + 100).cast("decimal(18,2)"))
       .withColumn("change_ts", lit(t1))

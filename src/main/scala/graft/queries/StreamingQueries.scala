@@ -332,11 +332,8 @@ object StreamingQueries {
     "mv_stream_transitions" -> QueryDef.sql(
       (s, dir) => {
         import graft.streaming.DimensionStream
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft_mv_tr_" +
-          Integer.toHexString(dir.hashCode)
-        val fs = new org.apache.hadoop.fs.Path(root)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(root), true)
+        val root = Tables.scratchDir("mv_tr", dir)
+        Tables.deletePath(s, root)
         val ev = Tables.events(s, dir)
           .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
         val cuts = ev.agg(
@@ -451,11 +448,8 @@ object StreamingQueries {
     "mv_stream_dau" -> QueryDef.sql(
       (s, dir) => {
         import graft.streaming.DimensionStream
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft_mv_dau_" +
-          Integer.toHexString(dir.hashCode)
-        val fs = new org.apache.hadoop.fs.Path(root)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(root), true)
+        val root = Tables.scratchDir("mv_dau", dir)
+        Tables.deletePath(s, root)
         val ev = Tables.events(s, dir)
           .select(col("event_id"), to_date(col("ts")).as("day"),
             col("user_id"), col("value"))
@@ -495,11 +489,8 @@ object StreamingQueries {
     "mv_hll_uniques" -> QueryDef.sql(
       (s, dir) => {
         import graft.streaming.DimensionStream
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft_mv_hll_" +
-          Integer.toHexString(dir.hashCode)
-        val fs = new org.apache.hadoop.fs.Path(root)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(root), true)
+        val root = Tables.scratchDir("mv_hll", dir)
+        Tables.deletePath(s, root)
         val ev = Tables.events(s, dir)
           .select(col("event_id"), to_date(col("ts")).as("day"), col("user_id"))
         DimensionStream.writeFeedBatches(

@@ -315,8 +315,7 @@ object ValidationQueries {
     // lake so the round-trip stays encoding-neutral.
     "gov_forget_user" -> QueryDef.sql(
       (s, dir) => {
-        val lake = s"${System.getProperty("java.io.tmpdir")}/graft_forget_" +
-          Integer.toHexString(dir.hashCode)
+        val lake = Tables.scratchDir("forget", dir)
         Tables.deletePath(s, lake)
         Tables.events(s, dir)
           .select(col("event_id"), col("user_id"), col("value"))

@@ -455,6 +455,25 @@ object Tables {
     ()
   }
 
+  /** A query's scratch root under `java.io.tmpdir`, named per
+    * (`name`, sf `dir`) so a rerun reuses one footprint instead of
+    * adding another. The dir is removed when the JVM exits, not
+    * earlier: the frames a query returns may still read it lazily.
+    */
+  def scratchDir(name: String, dir: String): String = {
+    val path = s"${System.getProperty("java.io.tmpdir")}/graft_${name}_" +
+      Integer.toHexString(dir.hashCode)
+    ScratchDirs.register(path)
+    path
+  }
+
+  private object ScratchDirs {
+    private val paths = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    sys.addShutdownHook(paths.forEach(p =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))))
+    def register(path: String): Unit = paths.add(path)
+  }
+
   /** `df` collected into a driver-local frame with the same schema, so
     * it no longer reads its source files: for results of a few rows
     * whose scratch directory is deleted before they are returned.

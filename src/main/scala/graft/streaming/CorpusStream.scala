@@ -15,21 +15,6 @@ import org.apache.spark.sql.functions._
   */
 object CorpusStream {
 
-  /** File-source stream over a documents parquet path (file or
-    * directory), schema taken from a batch peek (file streams
-    * require an explicit schema — inference would re-scan on every
-    * restart).
-    */
-  private def readDocsFileStream(spark: SparkSession, docsPath: String): DataFrame = {
-    val schema = spark.read.parquet(docsPath).schema
-    val p = new org.apache.hadoop.fs.Path(docsPath)
-    val conf = spark.sessionState.newHadoopConf()
-    val streamPath =
-      if (p.getFileSystem(conf).getFileStatus(p).isDirectory) docsPath
-      else s"${p.getParent}/{${p.getName}}"
-    spark.readStream.schema(schema).parquet(streamPath)
-  }
-
   /** Gopher quality gate through the REAL streaming engine:
     * readStream(documents) → [[TextAnalysis.gopherRules]] →
     * `gopher_pass` filter → Append mode → memory sink, with
@@ -50,19 +35,16 @@ object CorpusStream {
   def gopherGateAvailableNow(spark: SparkSession, docsPath: String,
                              minWords: Int = 30,
                              queryName: String = "corpus_stream_gate"): DataFrame = {
-    val stream = readDocsFileStream(spark, docsPath)
+    // file streams need an explicit schema: take it from a batch peek
+    val stream = BoundedStream.fileStream(spark, docsPath,
+        spark.read.parquet(docsPath).schema, None)
       .select(col("doc_id"), col("lang"), col("text"))
     val gated = TextAnalysis.gopherRules(stream, "text", minWords = minWords)
       .filter(col("gopher_pass"))
       .select("doc_id", "lang", "word_count", "mean_word_len",
         "symbol_ratio", "alpha_word_ratio", "stopword_hits")
-    val q = gated.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    // stateless: no state partitions to size
+    BoundedStream.toMemory(gated, "append", queryName, stateInputs = Nil)
     spark.table(queryName)
   }
 }

@@ -47,34 +47,19 @@ object DimensionStream {
     */
   def scd2MergeAvailableNow(spark: SparkSession, feedDir: String,
                             dimPath: String, conf: Scd2.Config,
-                            queryName: String = "scd2_stream_merge"): DataFrame = {
-    val schema = spark.read.parquet(feedDir).schema
-    val feed = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(feedDir)
-    val q = feed.writeStream
-      .outputMode("update")
-      .queryName(queryName)
-      .option("checkpointLocation", s"$dimPath.checkpoint")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          // asOf from the batch's own data: 1-row control-plane agg.
-          // The cast reads a naive (TIMESTAMP_NTZ) change_ts, what
-          // pyarrow and pandas write by default, as a zoned timestamp;
-          // under the UTC session it keeps the wall-clock value.
-          val asOf = batch.agg(max(col("change_ts")).cast("timestamp"))
-            .head.getTimestamp(0)
-          val target = spark.read.parquet(dimPath)
-          val merged = Scd2.merge(target, batch.drop("change_ts"), conf, asOf)
-          Scd2.writeAtomic(merged, dimPath)
-        }
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(dimPath)
-  }
+                            queryName: String = "scd2_stream_merge"): DataFrame =
+    BoundedStream.eachBatch(spark, feedDir, spark.read.parquet(feedDir).schema,
+        dimPath, queryName) { (batch, _) =>
+      // asOf from the batch's own data: 1-row control-plane agg.
+      // The cast reads a naive (TIMESTAMP_NTZ) change_ts, what
+      // pyarrow and pandas write by default, as a zoned timestamp;
+      // under the UTC session it keeps the wall-clock value.
+      val asOf = batch.agg(max(col("change_ts")).cast("timestamp"))
+        .head.getTimestamp(0)
+      val target = spark.read.parquet(dimPath)
+      val merged = Scd2.merge(target, batch.drop("change_ts"), conf, asOf)
+      Scd2.writeAtomic(merged, dimPath)
+    }
 
   /** Streaming materialized-view maintenance: each micro-batch's
     * algebraic aggregate state ([[graft.operators.Incremental]]'s
@@ -94,44 +79,10 @@ object DimensionStream {
                            valueCol: String,
                            queryName: String = "mv_stream"): DataFrame = {
     import graft.operators.Incremental
-    val schema = spark.read.parquet(feedDir).schema
-    val feed = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(feedDir)
-    val q = feed.writeStream
-      .outputMode("update")
-      .queryName(queryName)
-      .option("checkpointLocation", s"$statePath.checkpoint")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // At-least-once replay guard: foreachBatch can re-run a batch
-        // whose state merge already committed (crash after writeAtomic
-        // but before the streaming checkpoint commits) — merging a
-        // delta is NOT idempotent, so the last-applied batchId is
-        // persisted INSIDE the state dir via writeAtomic's sidecar
-        // (data + marker commit in the same rename) and replayed
-        // batches with id <= lastApplied are skipped.
-        val lastApplied = graft.operators.Scd2
-          .readSidecar(spark, statePath, "_last_batch_id")
-          .map(_.trim.toLong).getOrElse(-1L)
-        if (batchId > lastApplied && !batch.isEmpty) {
-          val delta = Incremental.aggState(batch, keys,
-            org.apache.spark.sql.functions.col(valueCol))
-          val fs = new org.apache.hadoop.fs.Path(statePath)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val merged =
-            if (fs.exists(new org.apache.hadoop.fs.Path(statePath)))
-              Incremental.mergeAggStates(
-                spark.read.parquet(statePath), delta, keys)
-            else delta
-          graft.operators.Scd2.writeAtomic(merged, statePath,
-            sidecar = Map("_last_batch_id" -> batchId.toString))
-        }
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(statePath)
+    mergeEachBatch(spark, feedDir, statePath, queryName) { (batch, prev) =>
+      val delta = Incremental.aggState(batch, keys, col(valueCol))
+      prev.map(Incremental.mergeAggStates(_, delta, keys)).getOrElse(delta)
+    }
   }
 
   /** Streaming DISTINCT-COUNT materialized view via mergeable HLL
@@ -153,36 +104,10 @@ object DimensionStream {
                               keyCol: String, lgK: Int = 12,
                               queryName: String = "mv_sketch"): DataFrame = {
     import graft.operators.Sketches
-    val schema = spark.read.parquet(feedDir).schema
-    val feed = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(feedDir)
-    val q = feed.writeStream
-      .outputMode("update")
-      .queryName(queryName)
-      .option("checkpointLocation", s"$statePath.checkpoint")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val lastApplied = graft.operators.Scd2
-          .readSidecar(spark, statePath, "_last_batch_id")
-          .map(_.trim.toLong).getOrElse(-1L)
-        if (batchId > lastApplied && !batch.isEmpty) {
-          val delta = Sketches.hllSketchState(batch, keys, keyCol, lgK)
-          val fs = new org.apache.hadoop.fs.Path(statePath)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val merged =
-            if (fs.exists(new org.apache.hadoop.fs.Path(statePath)))
-              Sketches.mergeSketchStates(
-                spark.read.parquet(statePath), delta, keys)
-            else delta
-          graft.operators.Scd2.writeAtomic(merged, statePath,
-            sidecar = Map("_last_batch_id" -> batchId.toString))
-        }
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(statePath)
+    mergeEachBatch(spark, feedDir, statePath, queryName) { (batch, prev) =>
+      val delta = Sketches.hllSketchState(batch, keys, keyCol, lgK)
+      prev.map(Sketches.mergeSketchStates(_, delta, keys)).getOrElse(delta)
+    }
   }
 
   /** Streaming EVENT-TRANSITION-MATRIX materialized view — the
@@ -220,92 +145,91 @@ object DimensionStream {
   def transitionMergeAvailableNow(spark: SparkSession, feedDir: String,
                                   statePath: String,
                                   queryName: String = "mv_transitions"): DataFrame = {
-    val schema = spark.read.parquet(feedDir).schema
-    val feed = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(feedDir)
-    val q = feed.writeStream
-      .outputMode("update")
-      .queryName(queryName)
-      .option("checkpointLocation", s"$statePath.checkpoint")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val lastApplied = Scd2.readSidecar(spark, statePath, "_last_batch_id")
-          .map(_.trim.toLong).getOrElse(-1L)
-        if (batchId > lastApplied && !batch.isEmpty) {
-          import org.apache.spark.sql.expressions.Window
-          val fs = new org.apache.hadoop.fs.Path(statePath)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val prev =
-            if (fs.exists(new org.apache.hadoop.fs.Path(statePath)))
-              Some(spark.read.parquet(statePath))
-            else None
-          val prevCnt = prev.map(_.filter(col("_kind") === "cnt")
-            .select("event_type", "next_type", "n"))
-          val frontier = prev.map(_.filter(col("_kind") === "frontier")
-            .select(col("user_id"), col("last_ts"), col("last_eid"),
-              col("last_type")))
-          val ev = batch.select(col("user_id"), col("ts"),
-            col("event_id"), col("event_type"))
-          val w = Window.partitionBy(col("user_id"))
-            .orderBy(col("ts"), col("event_id"))
-          val within = ev
-            .withColumn("next_type", lead(col("event_type"), 1).over(w))
-            .filter(col("next_type").isNotNull)
-            .groupBy(col("event_type"), col("next_type"))
-            .agg(count(lit(1)).as("n"))
-          val firsts = ev.withColumn("_rn", row_number().over(w))
-            .filter(col("_rn") === 1).drop("_rn")
-          val boundary = frontier.map(f => firsts
-            .join(f.hint("shuffle_hash"), Seq("user_id"))
-            .filter(col("last_ts") < col("ts") ||
-              (col("last_ts") === col("ts") && col("last_eid") < col("event_id")))
-            .groupBy(col("last_type").as("event_type"),
-              col("event_type").as("next_type"))
-            .agg(count(lit(1)).as("n")))
-          val deltas = boundary.map(within.unionByName(_)).getOrElse(within)
-          val mergedCnt = prevCnt.map(_.unionByName(deltas)).getOrElse(deltas)
-            .groupBy("event_type", "next_type").agg(sum(col("n")).as("n"))
-          val lasts = ev
-            .withColumn("_rn", row_number().over(
-              Window.partitionBy(col("user_id"))
-                .orderBy(col("ts").desc, col("event_id").desc)))
-            .filter(col("_rn") === 1)
-            .select(col("user_id"), col("ts").as("last_ts"),
-              col("event_id").as("last_eid"), col("event_type").as("last_type"))
-          val newFrontier = frontier.map(_.unionByName(lasts)).getOrElse(lasts)
-            .withColumn("_rn", row_number().over(
-              Window.partitionBy(col("user_id"))
-                .orderBy(col("last_ts").desc, col("last_eid").desc)))
-            .filter(col("_rn") === 1).drop("_rn")
-          val state = mergedCnt
-            .select(lit("cnt").as("_kind"), col("event_type"),
-              col("next_type"), col("n"),
-              lit(null).cast("bigint").as("user_id"),
-              lit(null).cast("timestamp").as("last_ts"),
-              lit(null).cast("bigint").as("last_eid"),
-              lit(null).cast("string").as("last_type"))
-            .unionByName(newFrontier.select(
-              lit("frontier").as("_kind"),
-              lit(null).cast("string").as("event_type"),
-              lit(null).cast("string").as("next_type"),
-              lit(null).cast("bigint").as("n"),
-              col("user_id"), col("last_ts"), col("last_eid"),
-              col("last_type")))
-          Scd2.writeAtomic(state, statePath,
-            sidecar = Map("_last_batch_id" -> batchId.toString))
-        }
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(statePath)
+    import org.apache.spark.sql.expressions.Window
+    mergeEachBatch(spark, feedDir, statePath, queryName) { (batch, prev) =>
+      val prevCnt = prev.map(_.filter(col("_kind") === "cnt")
+        .select("event_type", "next_type", "n"))
+      val frontier = prev.map(_.filter(col("_kind") === "frontier")
+        .select(col("user_id"), col("last_ts"), col("last_eid"),
+          col("last_type")))
+      val ev = batch.select(col("user_id"), col("ts"),
+        col("event_id"), col("event_type"))
+      val w = Window.partitionBy(col("user_id"))
+        .orderBy(col("ts"), col("event_id"))
+      val within = ev
+        .withColumn("next_type", lead(col("event_type"), 1).over(w))
+        .filter(col("next_type").isNotNull)
+        .groupBy(col("event_type"), col("next_type"))
+        .agg(count(lit(1)).as("n"))
+      val firsts = ev.withColumn("_rn", row_number().over(w))
+        .filter(col("_rn") === 1).drop("_rn")
+      val boundary = frontier.map(f => firsts
+        .join(f.hint("shuffle_hash"), Seq("user_id"))
+        .filter(col("last_ts") < col("ts") ||
+          (col("last_ts") === col("ts") && col("last_eid") < col("event_id")))
+        .groupBy(col("last_type").as("event_type"),
+          col("event_type").as("next_type"))
+        .agg(count(lit(1)).as("n")))
+      val deltas = boundary.map(within.unionByName(_)).getOrElse(within)
+      val mergedCnt = prevCnt.map(_.unionByName(deltas)).getOrElse(deltas)
+        .groupBy("event_type", "next_type").agg(sum(col("n")).as("n"))
+      val lasts = ev
+        .withColumn("_rn", row_number().over(
+          Window.partitionBy(col("user_id"))
+            .orderBy(col("ts").desc, col("event_id").desc)))
+        .filter(col("_rn") === 1)
+        .select(col("user_id"), col("ts").as("last_ts"),
+          col("event_id").as("last_eid"), col("event_type").as("last_type"))
+      val newFrontier = frontier.map(_.unionByName(lasts)).getOrElse(lasts)
+        .withColumn("_rn", row_number().over(
+          Window.partitionBy(col("user_id"))
+            .orderBy(col("last_ts").desc, col("last_eid").desc)))
+        .filter(col("_rn") === 1).drop("_rn")
+      mergedCnt
+        .select(lit("cnt").as("_kind"), col("event_type"),
+          col("next_type"), col("n"),
+          lit(null).cast("bigint").as("user_id"),
+          lit(null).cast("timestamp").as("last_ts"),
+          lit(null).cast("bigint").as("last_eid"),
+          lit(null).cast("string").as("last_type"))
+        .unionByName(newFrontier.select(
+          lit("frontier").as("_kind"),
+          lit(null).cast("string").as("event_type"),
+          lit(null).cast("string").as("next_type"),
+          lit(null).cast("bigint").as("n"),
+          col("user_id"), col("last_ts"), col("last_eid"),
+          col("last_type")))
+    }
   }
 
-  /** Write one CDC feed file (single parquet file, explicit
-    * modification time so the file source's modTime ordering replays
-    * batches deterministically).
+  /** The batch-id replay guard shared by the materialized-view loops:
+    * foreachBatch can re-run a batch whose state merge already
+    * committed (crash after writeAtomic but before the streaming
+    * checkpoint commits), and merging a delta is NOT idempotent. So
+    * the last-applied batchId is persisted INSIDE the state dir via
+    * writeAtomic's sidecar (data + marker commit in the same rename),
+    * and a batch with id <= lastApplied is skipped. `merge` gets the
+    * batch and the current state (None before the first commit) and
+    * returns the next state.
     */
+  private def mergeEachBatch(spark: SparkSession, feedDir: String, statePath: String,
+                             queryName: String)
+                            (merge: (DataFrame, Option[DataFrame]) => DataFrame): DataFrame =
+    BoundedStream.eachBatch(spark, feedDir, spark.read.parquet(feedDir).schema,
+        statePath, queryName) { (batch, batchId) =>
+      val lastApplied = Scd2.readSidecar(spark, statePath, "_last_batch_id")
+        .map(_.trim.toLong).getOrElse(-1L)
+      if (batchId > lastApplied) {
+        val hp = new org.apache.hadoop.fs.Path(statePath)
+        val prev =
+          if (hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp))
+            Some(spark.read.parquet(statePath))
+          else None
+        Scd2.writeAtomic(merge(batch, prev), statePath,
+          sidecar = Map("_last_batch_id" -> batchId.toString))
+      }
+    }
+
   /** Streaming CDC APPLY — the I/U/D consumer loop
     * ([[graft.operators.Incremental.applyChanges]] run per
     * micro-batch against a persisted state table), hardened one step
@@ -338,7 +262,7 @@ object DimensionStream {
                            payloadCols: Seq[String],
                            queryName: String = "cdc_stream_apply"): DataFrame = {
     val schema = spark.read.parquet(feedDir).schema
-    val stateCols0 = keys ++ (opCol +: payloadCols ++: orderCols)
+    val stateCols = opCol +: payloadCols ++: orderCols
     // Bootstrap: an absent state table means "no keys yet" — seed an
     // empty table with the feed's column shape so the first
     // micro-batch's full-outer join sees zero state rows instead of
@@ -382,46 +306,29 @@ object DimensionStream {
         val empty = spark.createDataFrame(
           new java.util.ArrayList[org.apache.spark.sql.Row](),
           org.apache.spark.sql.types.StructType(
-            stateCols0.map(c => schema(c))))
+            (keys ++ stateCols).map(c => schema(c))))
         empty.write.mode("overwrite").parquet(statePath)
       }
     }
-    val feed = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(feedDir)
     val ordState = struct(orderCols.map(col): _*)
-    val q = feed.writeStream
-      .outputMode("update")
-      .queryName(queryName)
-      .option("checkpointLocation", s"$statePath.checkpoint")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val latest = batch.groupBy(keys.map(col): _*)
-            .agg(max_by(
-              struct((opCol +: payloadCols ++: orderCols).map(col): _*),
-              ordState).as("_c"))
-            .hint("shuffle_hash")
-          val state = spark.read.parquet(statePath)
-          val joined = state.join(latest, keys, "full_outer")
-          // the incoming change wins only if STRICTLY newer — equal
-          // order keeps state, which makes replay a no-op
-          val incomingWins = col("_c").isNotNull && (col(opCol).isNull ||
-            struct(orderCols.map(c => col(s"_c.$c")): _*) > ordState)
-          val stateCols = (opCol +: payloadCols ++: orderCols)
-          val next = joined.select(keys.map(col) ++ stateCols.map(c =>
-            when(incomingWins, col(s"_c.$c")).otherwise(col(c)).as(c)): _*)
-          Scd2.writeAtomic(next, statePath)
-        }
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    val applied = BoundedStream.eachBatch(spark, feedDir, schema, statePath, queryName) { (batch, _) =>
+      val latest = batch.groupBy(keys.map(col): _*)
+        .agg(max_by(struct(stateCols.map(col): _*), ordState).as("_c"))
+        .hint("shuffle_hash")
+      val state = spark.read.parquet(statePath)
+      val joined = state.join(latest, keys, "full_outer")
+      // the incoming change wins only if STRICTLY newer — equal
+      // order keeps state, which makes replay a no-op
+      val incomingWins = col("_c").isNotNull && (col(opCol).isNull ||
+        struct(orderCols.map(c => col(s"_c.$c")): _*) > ordState)
+      val next = joined.select(keys.map(col) ++ stateCols.map(c =>
+        when(incomingWins, col(s"_c.$c")).otherwise(col(c)).as(c)): _*)
+      Scd2.writeAtomic(next, statePath)
+    }
     // null-safe tombstone filter: a state row with a NULL op (e.g. a
     // pre-seeded snapshot that never carried CDC ops) is LIVE — the
     // non-null-safe `=!= "D"` would silently drop it
-    spark.read.parquet(statePath)
-      .filter(!(col(opCol) <=> "D"))
+    applied.filter(!(col(opCol) <=> "D"))
       .select((keys ++ payloadCols).map(col): _*)
   }
 
@@ -478,6 +385,10 @@ object DimensionStream {
     fs.delete(tmp, true)
   }
 
+  /** Write one CDC feed file (single parquet file, explicit
+    * modification time so the file source's modTime ordering replays
+    * batches deterministically).
+    */
   def writeFeedFile(df: DataFrame, feedDir: String, name: String,
                     modTimeMs: Long): Unit = {
     val spark = df.sparkSession

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import graft.sources.Tables
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.StructType
@@ -21,15 +22,11 @@ object EventStream {
 
   /** File-source stream over a parquet directory. Streaming sources
     * need an explicit schema — pass one captured from a static read.
-    * `maxFilesPerTrigger=1` gives deterministic multi-batch replay in
-    * tests.
+    * One file per micro-batch gives deterministic multi-batch replay
+    * in tests.
     */
-  def readEventStream(spark: SparkSession, path: String, schema: StructType,
-                      maxFilesPerTrigger: Int = 1): DataFrame =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(path)
+  def readEventStream(spark: SparkSession, path: String, schema: StructType): DataFrame =
+    BoundedStream.fileStream(spark, path, schema, Some(1))
 
   /** Watermarked tumbling-window counts/sums per event_type — the
     * streaming twin of the `ev_window_agg` batch query.
@@ -58,7 +55,7 @@ object EventStream {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty)
-          graft.sources.Tables.writePartitioned(batch, path, partitionCols,
+          Tables.writePartitioned(batch, path, partitionCols,
             mode = "append")
       }
       .start()
@@ -95,6 +92,15 @@ object EventStream {
       }
       .start()
 
+  /** File-source stream over the events parquet (file or directory)
+    * with the same `ts` encoding dispatch as the batch `Tables.events`
+    * read (int64 nanos / timestamp_ntz / timestamp — see
+    * `Tables.normalizeEventTs`).
+    */
+  private def readEventsFileStream(spark: SparkSession, eventsPath: String): DataFrame =
+    Tables.normalizeEventTs(BoundedStream.fileStream(spark, eventsPath,
+      Tables.readParquetAutoNanos(spark, eventsPath).schema, None))
+
   /** Run the REAL streaming engine over the events table and return
     * the final windowed aggregate: file-source readStream →
     * [[windowedAgg]]'s grouping in Complete mode → memory sink, with
@@ -109,48 +115,6 @@ object EventStream {
     * bounded replay/verification; an unbounded deployment uses
     * [[windowedAgg]]'s watermarked Append mode + [[sinkToLake]].
     */
-  /** File-source stream over the events parquet with the same
-    * `ts` encoding dispatch as the batch `Tables.events` read (int64
-    * nanos / timestamp_ntz / timestamp — see
-    * `Tables.normalizeEventTs`). The file streaming source requires a
-    * directory (or glob) path; when handed a single parquet FILE,
-    * rewrite it as a `{name}` glob under its parent so the same call
-    * works for files and directories alike.
-    */
-  private def readEventsFileStream(spark: SparkSession, eventsPath: String): DataFrame = {
-    val schema =
-      graft.sources.Tables.readParquetAutoNanos(spark, eventsPath).schema
-    val p = new org.apache.hadoop.fs.Path(eventsPath)
-    val conf = spark.sessionState.newHadoopConf()
-    val streamPath =
-      if (p.getFileSystem(conf).getFileStatus(p).isDirectory) eventsPath
-      else s"${p.getParent}/{${p.getName}}"
-    graft.sources.Tables.normalizeEventTs(
-      spark.readStream.schema(schema).parquet(streamPath))
-  }
-
-  /** Run a bounded streaming aggregation to completion and return the
-    * final table: Complete mode → memory sink → `Trigger.AvailableNow`
-    * (process every available file, then stop — the batch-bounded
-    * replay mode; same code path a live deployment runs, minus an
-    * unbounded source).
-    */
-  private def runCompleteToMemory(agg: DataFrame, queryName: String,
-                                  inputPaths: Seq[String]): DataFrame = {
-    // state partitions sized to the stream's input (StateTuning: the
-    // per-partition-per-batch store commit is pure fixed overhead)
-    StateTuning.withStatePartitions(agg.sparkSession, inputPaths) {
-      val q = agg.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(queryName)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    agg.sparkSession.table(queryName)
-  }
-
   def windowedAggAvailableNow(spark: SparkSession, eventsPath: String,
                               windowDur: String = "1 hour",
                               queryName: String = "ev_stream_window_agg"): DataFrame = {
@@ -163,7 +127,8 @@ object EventStream {
         col("window.start").as("window_start"),
         col("window.end").as("window_end"),
         col("event_type"), col("n_events"), col("total_value"))
-    runCompleteToMemory(agg, queryName, Seq(eventsPath))
+    BoundedStream.toMemory(agg, "complete", queryName, Seq(eventsPath))
+    spark.table(queryName)
   }
 
   /** Stream-static broadcast enrichment through the REAL streaming
@@ -193,7 +158,8 @@ object EventStream {
       .agg(
         count(lit(1)).as("n_events"),
         sum(col("value").cast("decimal(30,6)")).cast("double").as("total_value"))
-    runCompleteToMemory(agg, queryName, Seq(s"$sfDir/events.parquet"))
+    BoundedStream.toMemory(agg, "complete", queryName, Seq(s"$sfDir/events.parquet"))
+    spark.table(queryName)
   }
 
   /** Watermarked STREAM-STREAM interval join through the real engine:
@@ -211,31 +177,37 @@ object EventStream {
     */
   def clickPurchaseJoinAvailableNow(spark: SparkSession, eventsPath: String,
                                     queryName: String = "ev_stream_interval_join"): DataFrame = {
-    val clicks = readEventsFileStream(spark, eventsPath)
+    val joined = clickPurchaseJoin(readEventsFileStream(spark, eventsPath),
+      readEventsFileStream(spark, eventsPath), "inner")
+    BoundedStream.toMemory(joined, "append", queryName, Seq(eventsPath))
+    spark.table(queryName)
+  }
+
+  /** Clicks ⋈ purchases on the same user, the purchase within
+    * [click − 30 min, click], each side watermarked 2 hours behind
+    * its event time.
+    */
+  private def clickPurchaseJoin(clickEvents: DataFrame, purchaseEvents: DataFrame,
+                                joinType: String): DataFrame = {
+    val clicks = clickEvents
       .filter(col("event_type") === "click")
       .select(col("user_id"), col("event_id").as("click_id"), col("ts").as("c_ts"))
       .withWatermark("c_ts", "2 hours")
-    val purchases = readEventsFileStream(spark, eventsPath)
+    val purchases = purchaseEvents
       .filter(col("event_type") === "purchase")
       .select(col("user_id").as("p_user_id"), col("event_id").as("purchase_id"),
         col("ts").as("p_ts"), col("value").as("p_value"))
       .withWatermark("p_ts", "2 hours")
-    val joined = clicks.join(purchases,
+    clicks.join(purchases,
       expr("""user_id = p_user_id
              |AND p_ts >= c_ts - INTERVAL 30 MINUTES
-             |AND p_ts <= c_ts""".stripMargin))
-      .select(col("user_id"), col("click_id"), col("c_ts"),
+             |AND p_ts <= c_ts""".stripMargin),
+      joinType)
+      .select(
+        // fullOuter: unmatched purchases have a null click side
+        coalesce(col("user_id"), col("p_user_id")).as("user_id"),
+        col("click_id"), col("c_ts"),
         col("purchase_id"), col("p_ts"), col("p_value"))
-    StateTuning.withStatePartitions(spark, Seq(eventsPath)) {
-      val q = joined.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(queryName)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.table(queryName)
   }
 
   /** Stream-stream LEFT OUTER interval join — the outer twin of
@@ -285,79 +257,62 @@ object EventStream {
                                 queryName: String): OuterJoinRun = {
     require(joinType == "leftOuter" || joinType == "fullOuter",
       s"joinType must be leftOuter|fullOuter, got $joinType")
-    val outSchema = StructType.fromDDL(
-      "user_id BIGINT, click_id BIGINT, c_ts TIMESTAMP, " +
-        "purchase_id BIGINT, p_ts TIMESTAMP, p_value DOUBLE")
-    val raw = graft.sources.Tables.normalizeEventTs(
-      graft.sources.Tables.readParquetAutoNanos(spark, eventsPath))
+    withHeartbeat(spark, eventsPath, Seq("click", "purchase")) { (stream, _) =>
+      val q = BoundedStream.toMemory(clickPurchaseJoin(stream, stream, joinType),
+        "append", queryName, Seq(eventsPath))
+      // final state-store size: last progress entry that carries state
+      // operator metrics (the terminal no-data batch may not)
+      OuterJoinRun(spark.table(queryName), q.recentProgress.reverseIterator
+        .find(_.stateOperators.nonEmpty)
+        .map(_.stateOperators.map(_.numRowsTotal).sum)
+        .getOrElse(0L))
+    }.getOrElse(OuterJoinRun(spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      StructType.fromDDL("user_id BIGINT, click_id BIGINT, c_ts TIMESTAMP, " +
+        "purchase_id BIGINT, p_ts TIMESTAMP, p_value DOUBLE")), 0L))
+  }
+
+  /** The watermark heartbeat of a bounded replay whose output waits
+    * on the watermark (outer stream joins, event-time session close):
+    * the stream ends before its watermark passes the tail, so state
+    * for the last rows would never flush. One far-future event per
+    * entry of `eventTypes`, 10 h past the newest event, pushes the
+    * final watermark past every real row. Each beat has its own user
+    * id BELOW the real id range: a hardcoded sentinel could collide
+    * with a real user and join real rows, and with a shared id (and
+    * equal timestamps) two beats would match EACH OTHER and emit — an
+    * inner match doesn't wait for any watermark.
+    *
+    * `body` gets the events stream with the beats appended, and the
+    * beats' user ids in `eventTypes` order. Empty input returns None:
+    * no rows, nothing to flush. The beats land in a temp dir that is
+    * removed when `body` returns (bench runs this repeatedly).
+    */
+  private def withHeartbeat[T](spark: SparkSession, eventsPath: String,
+                               eventTypes: Seq[String])
+                              (body: (DataFrame, Seq[Long]) => T): Option[T] = {
+    val raw = Tables.normalizeEventTs(Tables.readParquetAutoNanos(spark, eventsPath))
     val bounds = raw.agg(max(col("ts")), min(col("user_id"))).head
-    if (bounds.isNullAt(0)) // empty input: no rows, no heartbeat needed
-      return OuterJoinRun(
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], outSchema), 0L)
-    // +10h past the newest event; getTime's ms truncation loses <1s of
-    // that slack, irrelevant for a flush-everything heartbeat
+    if (bounds.isNullAt(0)) return None
+    // getTime's ms truncation loses <1s of the slack, irrelevant for a
+    // flush-everything heartbeat
     val beat = lit(new java.sql.Timestamp(
       bounds.getTimestamp(0).getTime + 10L * 3600 * 1000))
-    // DISTINCT impossible user ids per side, derived BELOW the real id
-    // range (hardcoded sentinels could collide with real users, letting
-    // a heartbeat join real rows): with a shared id (and equal
-    // timestamps) the two heartbeats would match EACH OTHER and emit —
-    // an inner match doesn't wait for any watermark. min(user_id) can
-    // be null with non-empty events (all ids null — such rows join
-    // nothing but still need flushing); 0 is then below every real id.
-    val sentinelBase =
-      if (bounds.isNullAt(1)) 0L else math.min(bounds.getLong(1), 0L)
-    val heartbeats = Seq("click" -> (sentinelBase - 1L),
-                         "purchase" -> (sentinelBase - 2L)).map {
-      case (tpe, uid) =>
-        raw.limit(1).select(
-          lit(-1L).as("event_id"), beat.as("ts"), lit(uid).as("user_id"),
-          lit(tpe).as("event_type"), lit(0.0).as("value"), lit("{}").as("props"))
+    // min(user_id) can be null with non-empty events (all ids null —
+    // such rows join nothing but still need flushing); 0 is then below
+    // every real id
+    val base = if (bounds.isNullAt(1)) 0L else math.min(bounds.getLong(1), 0L)
+    val ids = eventTypes.indices.map(i => base - 1L - i)
+    val beats = eventTypes.zip(ids).map { case (tpe, uid) =>
+      raw.limit(1).select(
+        lit(-1L).as("event_id"), beat.as("ts"), lit(uid).as("user_id"),
+        lit(tpe).as("event_type"), lit(0.0).as("value"), lit("{}").as("props"))
     }.reduce(_ unionByName _)
-    val beatDir = java.nio.file.Files.createTempDirectory("wm_heartbeat")
+    val beatDir = java.nio.file.Files.createTempDirectory("wm_heartbeat").toString
     try {
-      heartbeats.write.mode("overwrite").parquet(beatDir.toString)
-      val stream = readEventsFileStream(spark, eventsPath)
-        .unionByName(readEventsFileStream(spark, beatDir.toString))
-      val clicks = stream
-        .filter(col("event_type") === "click")
-        .select(col("user_id"), col("event_id").as("click_id"), col("ts").as("c_ts"))
-        .withWatermark("c_ts", "2 hours")
-      val purchases = stream
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id").as("p_user_id"), col("event_id").as("purchase_id"),
-          col("ts").as("p_ts"), col("value").as("p_value"))
-        .withWatermark("p_ts", "2 hours")
-      val joined = clicks.join(purchases,
-        expr("""user_id = p_user_id
-               |AND p_ts >= c_ts - INTERVAL 30 MINUTES
-               |AND p_ts <= c_ts""".stripMargin),
-        joinType)
-        .select(
-          // fullOuter: unmatched purchases have a null click side
-          coalesce(col("user_id"), col("p_user_id")).as("user_id"),
-          col("click_id"), col("c_ts"),
-          col("purchase_id"), col("p_ts"), col("p_value"))
-      val stateRows = StateTuning.withStatePartitions(spark, Seq(eventsPath)) {
-        val q = joined.writeStream
-          .outputMode("append")
-          .format("memory")
-          .queryName(queryName)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        // final state-store size: last progress entry that carries state
-        // operator metrics (the terminal no-data batch may not)
-        q.recentProgress.reverseIterator
-          .find(_.stateOperators.nonEmpty)
-          .map(_.stateOperators.map(_.numRowsTotal).sum)
-          .getOrElse(0L)
-      }
-      OuterJoinRun(spark.table(queryName), stateRows)
-    } finally { // bench runs this repeatedly — never leak the temp dir
-      graft.sources.Tables.deletePath(spark, beatDir.toString)
-    }
+      beats.write.mode("overwrite").parquet(beatDir)
+      Some(body(readEventsFileStream(spark, eventsPath)
+        .unionByName(readEventsFileStream(spark, beatDir)), ids))
+    } finally Tables.deletePath(spark, beatDir)
   }
 
   /** Streaming exact deduplication for ingest pipelines: drop events
@@ -385,18 +340,9 @@ object EventStream {
   def dedupKeysAvailableNow(spark: SparkSession, eventsPath: String,
                             keyCols: Seq[String],
                             queryName: String = "ev_stream_dedup"): DataFrame = {
-    val stream = readEventsFileStream(spark, eventsPath)
-    val deduped = streamingDedup(stream, keyCols)
+    val deduped = streamingDedup(readEventsFileStream(spark, eventsPath), keyCols)
       .select(keyCols.map(col): _*)
-    StateTuning.withStatePartitions(spark, Seq(eventsPath)) {
-      val q = deduped.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(queryName)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    BoundedStream.toMemory(deduped, "append", queryName, Seq(eventsPath))
     spark.table(queryName)
   }
 
@@ -437,16 +383,8 @@ object EventStream {
     */
   def userCountsAvailableNow(spark: SparkSession, eventsPath: String,
                              queryName: String = "ev_stream_user_counts"): DataFrame = {
-    val stream = readEventsFileStream(spark, eventsPath)
-    StateTuning.withStatePartitions(spark, Seq(eventsPath)) {
-      val q = runningUserCounts(stream).toDF().writeStream
-        .outputMode("update")
-        .format("memory")
-        .queryName(queryName)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    BoundedStream.toMemory(runningUserCounts(readEventsFileStream(spark, eventsPath)).toDF(),
+      "update", queryName, Seq(eventsPath))
     spark.table(queryName)
       .groupBy("user_id")
       .agg(max(col("n_events")).as("n_events"), max(col("last_ts")).as("last_ts"))
@@ -525,41 +463,14 @@ object EventStream {
     */
   def sessionsAvailableNow(spark: SparkSession, eventsPath: String,
                            queryName: String = "ev_stream_sessions"): DataFrame = {
-    val raw = graft.sources.Tables.normalizeEventTs(
-      graft.sources.Tables.readParquetAutoNanos(spark, eventsPath))
-    val outSchema = StructType.fromDDL(
-      "user_id BIGINT, session_start TIMESTAMP, " +
-        "session_end TIMESTAMP, n_events BIGINT")
-    val bounds = raw.agg(max(col("ts")), min(col("user_id"))).head
-    if (bounds.isNullAt(0)) // empty input: no sessions, no heartbeat
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], outSchema)
-    val beat = new java.sql.Timestamp(
-      bounds.getTimestamp(0).getTime + 10L * 3600 * 1000)
-    val sentinel =
-      (if (bounds.isNullAt(1)) 0L else math.min(bounds.getLong(1), 0L)) - 1L
-    val beatDir = java.nio.file.Files.createTempDirectory("sess_heartbeat")
-    try {
-      raw.limit(1).select(
-        lit(-1L).as("event_id"), lit(beat).as("ts"),
-        lit(sentinel).as("user_id"), lit("heartbeat").as("event_type"),
-        lit(0.0).as("value"), lit("{}").as("props"))
-        .write.mode("overwrite").parquet(beatDir.toString)
-      val stream = readEventsFileStream(spark, eventsPath)
-        .unionByName(readEventsFileStream(spark, beatDir.toString))
+    withHeartbeat(spark, eventsPath, Seq("heartbeat")) { (stream, ids) =>
       val sess = sessionize(stream, gapMinutes = 30, watermarkDelay = "2 hours")
-        .filter(col("user_id") =!= sentinel)
+        .filter(col("user_id") =!= ids.head)
         .select("user_id", "session_start", "session_end", "n_events")
-      StateTuning.withStatePartitions(spark, Seq(eventsPath)) {
-        val q = sess.writeStream
-          .outputMode("append")
-          .format("memory")
-          .queryName(queryName)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      BoundedStream.toMemory(sess, "append", queryName, Seq(eventsPath))
       spark.table(queryName)
-    } finally graft.sources.Tables.deletePath(spark, beatDir.toString)
+    }.getOrElse(spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      StructType.fromDDL("user_id BIGINT, session_start TIMESTAMP, " +
+        "session_end TIMESTAMP, n_events BIGINT")))
   }
 }

@@ -485,37 +485,75 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming MV: replayed batch (state committed, checkpoint lost) is not double-merged") {
-    import graft.operators.Incremental
+    import graft.operators.{Incremental, Sketches}
     import graft.streaming.DimensionStream
+    import org.apache.spark.sql.DataFrame
+    /** One materialized-view loop: its feed as two arrivals, a run over
+      * (feedDir, statePath, queryName), a comparable snapshot of the
+      * state it returns, and the snapshot of the one-shot answer. */
+    final case class Mv(name: String, first: DataFrame, rest: DataFrame,
+                        run: (String, String, String) => DataFrame,
+                        snap: DataFrame => Any, expected: Any)
     val li = Tables.table(spark, sfDir, "lineitem")
       .filter($"l_extendedprice" > 0)
       .withColumn("ship_date", to_date($"l_shipdate"))
       .select("l_orderkey", "l_suppkey", "ship_date", "l_extendedprice")
-    val root = java.nio.file.Files.createTempDirectory("mvreplay").toString
     val keys = Seq("l_suppkey", "ship_date")
-    def snap(df: org.apache.spark.sql.DataFrame) =
+    def revenue(df: DataFrame) =
       Incremental.finalizeAggState(df, "total_revenue", "trip_count")
         .collect().map(r => (r.getLong(0), r.getDate(1).toString) ->
           (r.getDouble(2), r.getLong(3))).toMap
-    DimensionStream.writeFeedFile(
-      li.filter($"l_orderkey" % 3 === 0), s"$root/feed", "b0", 1700000000000L)
-    val s1 = snap(DimensionStream.aggMergeAvailableNow(spark, s"$root/feed",
-      s"$root/state", keys, "l_extendedprice", queryName = "spec_mv_replay_1"))
-    // the worst-case at-least-once window: the state commit survived
-    // but the streaming checkpoint didn't — the restarted stream
-    // REPLAYS b0 as batchId 0, which the sidecar marker must skip
-    org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(s"$root/state.checkpoint"))
-    val s2 = snap(DimensionStream.aggMergeAvailableNow(spark, s"$root/feed",
-      s"$root/state", keys, "l_extendedprice", queryName = "spec_mv_replay_2"))
-    assert(s2 === s1) // replay did NOT double-count the delta
-    // and the stream still makes progress past the replayed batch
-    DimensionStream.writeFeedFile(
-      li.filter($"l_orderkey" % 3 =!= 0), s"$root/feed", "b1", 1700000060000L)
-    val s3 = snap(DimensionStream.aggMergeAvailableNow(spark, s"$root/feed",
-      s"$root/state", keys, "l_extendedprice", queryName = "spec_mv_replay_3"))
-    val expected = snap(Incremental.aggState(li, keys, $"l_extendedprice"))
-    assert(s3 === expected)
+    // transitions: ts-ordered halves (the append-arrival contract the
+    // boundary stitch requires)
+    val ev = Tables.events(spark, sfDir)
+      .select($"user_id", $"ts", $"event_id", $"event_type")
+    val cut = ev.agg(expr("percentile(CAST(unix_micros(ts) AS DOUBLE), 0.5)"))
+      .head().getDouble(0)
+    val us = unix_micros($"ts").cast("double")
+    def transitions(df: DataFrame) =
+      df.filter($"_kind" === "cnt").select("event_type", "next_type", "n")
+        .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy($"user_id").orderBy($"ts", $"event_id")
+    val oneShotTransitions = ev
+      .withColumn("next_type", lead($"event_type", 1).over(w))
+      .filter($"next_type".isNotNull)
+      .groupBy("event_type", "next_type").agg(count(lit(1)).as("n"))
+      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    val days = Tables.events(spark, sfDir)
+      .select($"event_id", to_date($"ts").as("day"), $"user_id")
+    def uniques(df: DataFrame) = Sketches.finalizeSketchState(df, "est")
+      .collect().map(r => r.getDate(0).toString -> r.getLong(1)).toMap
+    val mvs = Seq(
+      Mv("agg", li.filter($"l_orderkey" % 3 === 0), li.filter($"l_orderkey" % 3 =!= 0),
+        (feed, state, q) => DimensionStream.aggMergeAvailableNow(spark, feed, state,
+          keys, "l_extendedprice", queryName = q),
+        revenue, revenue(Incremental.aggState(li, keys, $"l_extendedprice"))),
+      Mv("transitions", ev.filter(us <= cut), ev.filter(us > cut),
+        (feed, state, q) => DimensionStream.transitionMergeAvailableNow(spark, feed, state,
+          queryName = q),
+        transitions, oneShotTransitions),
+      Mv("sketch", days.filter($"event_id" % 2 === 0), days.filter($"event_id" % 2 =!= 0),
+        (feed, state, q) => DimensionStream.sketchMergeAvailableNow(spark, feed, state,
+          Seq("day"), "user_id", queryName = q),
+        uniques, uniques(Sketches.hllSketchState(days, Seq("day"), "user_id"))))
+    mvs.foreach { mv =>
+      val root = java.nio.file.Files.createTempDirectory(s"mvreplay_${mv.name}").toString
+      def run(i: Int) = mv.snap(mv.run(s"$root/feed", s"$root/state",
+        s"spec_mv_replay_${mv.name}_$i"))
+      DimensionStream.writeFeedFile(mv.first, s"$root/feed", "b0", 1700000000000L)
+      val s1 = run(1)
+      // the worst-case at-least-once window: the state commit survived
+      // but the streaming checkpoint didn't — the restarted stream
+      // REPLAYS b0 as batchId 0, which the sidecar marker must skip
+      org.apache.commons.io.FileUtils.deleteDirectory(
+        new java.io.File(s"$root/state.checkpoint"))
+      val s2 = run(2)
+      assert(s2 === s1, s"${mv.name}: the replayed batch was merged again")
+      // and the stream still makes progress past the replayed batch
+      DimensionStream.writeFeedFile(mv.rest, s"$root/feed", "b1", 1700000060000L)
+      assert(run(3) === mv.expected, s"${mv.name}: resumed state != one-shot")
+    }
   }
 
   /** Feeds two CDC batches through `scd2MergeAvailableNow`, their

@@ -101,6 +101,25 @@ class TablesSpec extends SparkSpec {
     assert(e.getCondition === "PATH_NOT_FOUND")
   }
 
+  test("scratchDir: one stable path per (name, sf dir), removed when the JVM exits") {
+    val dir = tmp()
+    assert(Tables.scratchDir("spec", dir) === Tables.scratchDir("spec", dir))
+    assert(Tables.scratchDir("spec", dir) !== Tables.scratchDir("spec", dir + "/other"))
+    assert(Tables.scratchDir("spec", dir).startsWith(
+      s"${System.getProperty("java.io.tmpdir")}/graft_spec_"))
+    // the cleanup runs at JVM exit, so it is observed from a child JVM
+    // that creates its scratch dir under its own tmpdir and exits
+    val childTmp = tmp()
+    val proc = new ProcessBuilder(
+      s"${System.getProperty("java.home")}/bin/java", s"-Djava.io.tmpdir=$childTmp",
+      "-cp", System.getProperty("java.class.path"), "graft.ScratchDirProbe", dir)
+      .redirectErrorStream(true).start()
+    val out = scala.io.Source.fromInputStream(proc.getInputStream).mkString.trim
+    assert(proc.waitFor() === 0, out)
+    assert(out.startsWith(s"$childTmp/graft_probe_"), out)
+    assert(!new java.io.File(out).exists(), s"$out survived the JVM exit")
+  }
+
   test("partitioned write + latestPartition incremental read") {
     val dir = tmp() + "/t"
     val df = Seq((1, "2024-01-01"), (2, "2024-01-02"), (3, "2024-01-02"))
@@ -676,5 +695,17 @@ class TablesSpec extends SparkSpec {
       .map(r => r.getString(0) -> (r.getDouble(1), r.getLong(2))).toMap
     assert(r2 === r1)
     assert(mtimes === before, "bucketed ingest re-ran on re-invocation")
+  }
+}
+
+/** Creates a non-empty scratch dir for the sf dir in `args(0)`, prints
+  * its path and exits: TablesSpec checks the dir is gone afterwards.
+  */
+object ScratchDirProbe {
+  def main(args: Array[String]): Unit = {
+    val root = Tables.scratchDir("probe", args(0))
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root, "part"))
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(root, "part", "f.txt"), "x")
+    println(root)
   }
 }
