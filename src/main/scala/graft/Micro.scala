@@ -1,15 +1,24 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Dev micro-benchmark: isolates the cost of implementation variants
-  * (currently: the exact-decimal-sum determinism tax on the flagship
-  * aggregation). Usage: tools/run.sh graft.Micro [sfDir]
+/** Dev probes over the registered queries, on the bench session.
+  * Usage: tools/run.sh graft.Micro <sfDir> <mode> [query...], with
+  * mode one of mdmblocks, count, pairdeg, buckets, stages, query
+  * (each described at its block below).
   */
 object Micro {
+  private val Modes =
+    Seq("mdmblocks", "count", "pairdeg", "buckets", "stages", "query")
+
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
+    val mode = args.lift(1).getOrElse("")
+    if (!Modes.contains(mode)) {
+      System.err.println(
+        s"usage: graft.Micro <sfDir> <${Modes.mkString("|")}> [query...]")
+      sys.exit(2)
+    }
+    val sfDir = args(0)
     // GraftSession, NOT a bare builder: the bench/verify path runs
     // with AQE + UTC + the engine extensions, and a probe session
     // missing those measures a DIFFERENT plan (observed: 5× on
@@ -17,7 +26,7 @@ object Micro {
     val spark = GraftSession.local("graft-micro",
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
-    val ngramOnly = args.lift(1).contains("ngram")
+    graft.plans.GraftExtensions.register(spark)
 
     // MDM block-size adjudication: `Micro <dir> mdmblocks` — fine- vs
     // coarse-key block-size histogram plus the capped pair-space size,
@@ -26,8 +35,7 @@ object Micro {
     // — is UNSHIFTED under ScaledCorpus replication, so blocks grow
     // ×copies and the pair-listing OUTPUT grows ~quadratically; work
     // ∝ output is the semantics, not a plan regression).
-    if (args.lift(1).contains("mdmblocks")) {
-      graft.plans.GraftExtensions.register(spark)
+    if (mode == "mdmblocks") {
       import graft.queries.MdmQueries
       val ents = MdmQueries.entitiesFine(spark, sfDir).cache()
       val nEnts = ents.count()
@@ -47,7 +55,6 @@ object Micro {
       }
       val outRows = SparkEntry.queries("mdm_match_pairs_fine")(spark, sfDir).count()
       println(s"mdm_match_pairs_fine output rows = $outRows")
-      spark.stop(); return
     }
 
     // output-row null model: `Micro <dir> count <name>...` — a
@@ -56,12 +63,10 @@ object Micro {
     // the ratio can be scored against output growth (this probe found
     // the r13-era corpus's period-6 rotation manufacturing ×4551 LSH
     // pair output at 100× — see ScaledCorpus.permuted).
-    if (args.lift(1).contains("count")) {
-      graft.plans.GraftExtensions.register(spark)
+    if (mode == "count") {
       args.drop(2).foreach { n =>
         println(s"$n rows=${SparkEntry.queries(n)(spark, sfDir).count()}")
       }
-      spark.stop(); return
     }
 
     // LSH pair-graph structure probe: `Micro <dir> pairdeg` — node
@@ -69,8 +74,7 @@ object Micro {
     // Σ d(d−1)/2 (the triangle-census cost driver): a derived-scale
     // slowdown in graph queries can come from degree STRUCTURE, not
     // edge count, and this separates the two.
-    if (args.lift(1).contains("pairdeg")) {
-      graft.plans.GraftExtensions.register(spark)
+    if (mode == "pairdeg") {
       val pairs = SparkEntry.queries("dd_minhash_pairs")(spark, sfDir)
         .cache()
       val nPairs = pairs.count()
@@ -90,7 +94,6 @@ object Micro {
       println(f"pairs=$nPairs cross_replica=$cross nodes=$nNodes " +
         f"deg_p50=${qs(0)}%.0f p90=${qs(1)}%.0f p99=${qs(2)}%.0f max=${qs(3)}%.0f " +
         f"wedges=$wedges")
-      spark.stop(); return
     }
 
     // LSH band-bucket histogram: `Micro <dir> buckets` — bucket-size
@@ -98,8 +101,7 @@ object Micro {
     // the input to the maxBucketSize cap decision (a bucket of b docs
     // is a b-clique in the candidate-pair graph: pair work b², census
     // work b³).
-    if (args.lift(1).contains("buckets")) {
-      graft.plans.GraftExtensions.register(spark)
+    if (mode == "buckets") {
       import graft.operators.TextDedup
       val sigs = TextDedup.minhashSignatures(
         graft.queries.LlmQueries.nearDupCorpus(spark, sfDir), "doc_id", "text")
@@ -112,7 +114,6 @@ object Micro {
         .collect().map(_.getLong(0))
       println(f"buckets=$n p50=${qs(0)}%.0f p90=${qs(1)}%.0f " +
         f"p99=${qs(2)}%.0f top10=${top.mkString(",")}")
-      spark.stop(); return
     }
 
     // generic per-stage breakdown: `Micro <dir> stages <name>...` —
@@ -120,8 +121,7 @@ object Micro {
     // plus (for streaming queries) every micro-batch's durationMs
     // breakdown and state-operator commit times. The "where does the
     // wall-time actually go" probe the optimization loop starts from.
-    if (args.lift(1).contains("stages")) {
-      graft.plans.GraftExtensions.register(spark)
+    if (mode == "stages") {
       val stages = new java.util.concurrent.ConcurrentHashMap[Int, String]()
       val listener = new org.apache.spark.scheduler.SparkListener {
         override def onStageCompleted(
@@ -167,7 +167,6 @@ object Micro {
         import scala.jdk.CollectionConverters._
         stages.asScala.toSeq.sortBy(_._1).foreach(s => println(s._2))
       }
-      spark.stop(); return
     }
 
     // generic registered-query timing: `Micro <dir> query <name>...`
@@ -176,8 +175,7 @@ object Micro {
     // listener), the exchange-volume axis behind e.g. the md5-vs-xx64
     // band-key adjudication: wall time says which is faster, shuffle
     // bytes say WHY.
-    if (args.lift(1).contains("query")) {
-      graft.plans.GraftExtensions.register(spark)
+    if (mode == "query") {
       val shuffleBytes = new java.util.concurrent.atomic.AtomicLong()
       // listener events are async: drain the bus to a fence before
       // resetting / reading the counter, so no run's bytes bleed into
@@ -214,162 +212,8 @@ object Micro {
           f"shuffle_mb=${best._2 / 1048576.0}%.1f " +
           f"runs=${runs.map(r => f"${r._1}%.2f").mkString(",")}")
       }
-      spark.stop(); return
     }
 
-    val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-    if (!ngramOnly) li.count() // warm file cache
-
-    def time(name: String)(f: => Unit): Unit = {
-      val runs = (1 to 3).map { _ =>
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
-      println(f"$name%-18s min=${runs.min}%.3fs runs=${runs.map(r => f"$r%.2f").mkString(",")}")
-    }
-
-    if (!ngramOnly) {
-    val grouped = li.filter(col("l_extendedprice") > 0)
-      .groupBy(col("l_suppkey"), to_date(col("l_shipdate")).as("d"))
-    time("decimal30_sum") {
-      grouped.agg(sum(col("l_extendedprice").cast("decimal(30,2)")).cast("double"))
-        .write.format("noop").mode("overwrite").save()
-    }
-    time("double_sum") {
-      grouped.agg(sum(col("l_extendedprice")))
-        .write.format("noop").mode("overwrite").save()
-    }
-    time("cents_long_sum") {
-      grouped.agg((sum(round(col("l_extendedprice") * 100).cast("long")) / 100.0))
-        .write.format("noop").mode("overwrite").save()
-    }
-
-    // vec_dot (codegen'd Expression) vs the aggregate(zip_with) HOF
-    // formulation on an all-pairs scoring workload
-    graft.plans.GraftExtensions.register(spark)
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-    emb.count()
-    val q = broadcast(emb.limit(100)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv")))
-    val pairs = emb.crossJoin(q)
-    def hofDot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-        lit(0.0), (acc, x) => acc + x)
-    time("dot_codegen") {
-      pairs.select(sum(expr("vec_dot(embedding, qv)"))).write
-        .format("noop").mode("overwrite").save()
-    }
-    time("dot_hof") {
-      pairs.select(sum(hofDot(col("embedding"), col("qv")))).write
-        .format("noop").mode("overwrite").save()
-    }
-    }
-
-    // dd_ngram_prefix stage breakdown (pass "ngram" as 2nd arg):
-    // where does the prefix-join's wall-time actually go at scale?
-    if (ngramOnly) {
-      graft.plans.GraftExtensions.register(spark)
-      import graft.functions.Functions.normalizeText
-      val docsDf = spark.read.parquet(s"$sfDir/documents.parquet")
-      val d = docsDf.select(col("doc_id"), col("text"), col("lang"))
-        .unionByName(docsDf.select((col("doc_id") + 10000).as("doc_id"),
-          concat(col("text"), lit(" copy")).as("text"), col("lang")))
-      d.count() // warm cache
-      val threshold = 0.5
-      val prepared = d
-        .filter(col("text").isNotNull)
-        .withColumn("_norm", normalizeText(col("text")))
-        .withColumn("_sh", expr("packed_shingles(_norm, 5)"))
-        .withColumn("_len", size(col("_sh")))
-        .withColumn("_plen",
-          (col("_len") - floor(lit(threshold) * col("_len")).cast("int") + 1))
-        .withColumn("_iplen",
-          (col("_len") -
-            floor(lit(2 * threshold / (1 + threshold)) * col("_len")).cast("int") + 1))
-        .select(col("doc_id"), col("lang"), col("_sh"), col("_len"),
-          col("_plen"), col("_iplen"))
-      val toks = prepared.select(
-        col("doc_id"), col("lang"), col("_len"), col("_plen"), col("_iplen"),
-        explode(col("_sh")).as("_tok"))
-      val dfreq = toks.groupBy(col("lang"), col("_tok"))
-        .agg(count(lit(1)).as("_df"))
-      import org.apache.spark.sql.expressions.Window
-      val byRarity = Window.partitionBy(col("doc_id"))
-        .orderBy(col("_df").asc, col("_tok").asc)
-      val prefixToks = toks.join(dfreq, Seq("lang", "_tok"))
-        .withColumn("_rk", row_number().over(byRarity))
-        .filter(col("_rk") <= col("_plen"))
-        .select(col("doc_id"), col("lang"), col("_len"), col("_iplen"),
-          col("_tok"), col("_rk"))
-      val ix = prefixToks.filter(col("_rk") <= col("_iplen")).select(
-        col("lang"), col("_tok"),
-        col("doc_id").as("id_1"), col("_len").as("len_1"), col("_rk").as("rk_1"))
-      val probe = prefixToks.select(
-        col("lang"), col("_tok"),
-        col("doc_id").as("id_2"), col("_len").as("len_2"), col("_rk").as("rk_2"))
-      val alpha = lit(threshold / (1 + threshold)) *
-        (col("len_1") + col("len_2")).cast("double")
-      val candidates = ix.join(probe, Seq("lang", "_tok"))
-        .filter(col("len_1") < col("len_2") ||
-          (col("len_1") === col("len_2") && col("id_1") < col("id_2")))
-        .filter(col("len_1").cast("double") >= lit(threshold) * col("len_2"))
-        .filter(
-          (least(col("rk_1"), col("rk_2")) +
-            least(col("len_1") - col("rk_1"), col("len_2") - col("rk_2")))
-            .cast("double") + lit(1e-9) >= alpha)
-        .select("id_1", "id_2").dropDuplicates("id_1", "id_2")
-      def time1(name: String)(f: => Unit): Unit = {
-        val t0 = System.nanoTime(); f
-        println(f"$name%-18s ${(System.nanoTime() - t0) / 1e9}%.3fs")
-        System.out.flush()
-      }
-      time1("ng_prepared") {
-        prepared.write.format("noop").mode("overwrite").save()
-      }
-      time1("ng_toks_dfreq") {
-        dfreq.write.format("noop").mode("overwrite").save()
-      }
-      time1("ng_prefixToks") {
-        prefixToks.write.format("noop").mode("overwrite").save()
-      }
-      time1("ng_candidates") {
-        candidates.write.format("noop").mode("overwrite").save()
-      }
-      println(s"candidate pairs: ${candidates.count()}")
-    }
-
-    // full dd_ngram_prefix with per-stage wall/shuffle accounting
-    // (pass "ngramstages" as 2nd arg)
-    if (args.lift(1).contains("ngramstages")) {
-      graft.plans.GraftExtensions.register(spark)
-      val docsDf = spark.read.parquet(s"$sfDir/documents.parquet")
-      val d = docsDf.select(col("doc_id"), col("text"), col("lang"))
-        .unionByName(docsDf.select((col("doc_id") + 10000).as("doc_id"),
-          concat(col("text"), lit(" copy")).as("text"), col("lang")))
-      d.count() // warm cache
-      val stages = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val si = sc.stageInfo
-          val dur = (si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L)) / 1000.0
-          val m = si.taskMetrics
-          stages.put(si.stageId,
-            f"stage=${si.stageId}%3d dur=$dur%7.1fs tasks=${si.numTasks}%4d " +
-              f"sRead=${m.shuffleReadMetrics.totalBytesRead / 1e9}%6.2fGB " +
-              f"sWrite=${m.shuffleWriteMetrics.bytesWritten / 1e9}%6.2fGB  ${si.name}")
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      val t0 = System.nanoTime()
-      graft.operators.TextDedup.ngramJaccardPairsPrefix(
-        d, "doc_id", "text", "lang", threshold = 0.5)
-        .write.format("noop").mode("overwrite").save()
-      println(f"full query: ${(System.nanoTime() - t0) / 1e9}%.1fs")
-      spark.sparkContext.removeSparkListener(listener)
-      import scala.jdk.CollectionConverters._
-      stages.asScala.toSeq.sortBy(_._1).foreach(s => println(s._2))
-    }
     spark.stop()
   }
 }

@@ -21,10 +21,11 @@ import org.apache.spark.sql.functions._
   *    count) + a 1-row argmax collect + a map-only merge application.
   *    At 100 TB the loop costs the same as at 100 GB, because the
   *    working set is the vocabulary, not the corpus.
-  *  - Per-iteration plans are eagerly local-checkpointed (the same
-  *    lineage-truncation discipline as [[TextDedup.dupClusters]]) so
-  *    plan depth stays flat across hundreds of merges; on a real
-  *    cluster prefer reliable `checkpoint()`.
+  *  - The merge loop runs on the [[Iterate]] runner: each
+  *    iteration's table is eagerly local-checkpointed (serialized) so
+  *    plan depth stays flat across hundreds of merges, and the
+  *    iteration it replaces is released; on a real cluster prefer
+  *    reliable `checkpoint()`.
   *
   * Determinism: the argmax tiebreak is (count desc, pair asc) — a
   * total order — so retrainings on the same corpus produce the same
@@ -80,34 +81,40 @@ object Bpe {
           concat(slice(acc, lit(1), size(acc) - 1), array(lit(a + b))))
           .otherwise(concat(acc, array(x))))
 
+  /** Checkpoint storage for the merge loop: serialized blocks, the
+    * level components chose after deserialized round blocks squeezed
+    * the execution pool at 30× (TextDedup's CkptLevel).
+    */
+  private val CkptLevel =
+    org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
+
   /** Train `numMerges` merges. Each iteration: pair aggregation →
     * 1-row deterministic argmax (collected — control plane) → map-only
     * merge application → eager checkpoint. Stops early when the best
     * pair's count falls below `minCount` (nothing left worth merging).
+    * The merge table lives on the driver, so the last iteration's
+    * table is released too: a call leaves no blocks behind.
     */
   def train(df: DataFrame, textCol: String, numMerges: Int,
             minCount: Long = 2L): Seq[Merge] = {
     require(numMerges >= 1, s"numMerges must be >= 1, got $numMerges")
-    var words = wordFreq(df, textCol)
-      .select(initialSyms(col("word")).as("syms"), col("freq"))
-      .localCheckpoint(true)
+    val start = Iterate.checkpoint(wordFreq(df, textCol)
+      .select(initialSyms(col("word")).as("syms"), col("freq")), CkptLevel)
     val merges = Seq.newBuilder[Merge]
     var rank = 0
-    var done = false
-    while (rank < numMerges && !done) {
+    val (last, _) = Iterate.fixpoint("bpe", start, CkptLevel, numMerges) { words =>
       val top = pairCounts(words)
         .orderBy(col("n").desc, col("a").asc, col("b").asc)
         .limit(1).collect()
-      if (top.isEmpty || top.head.getLong(2) < minCount) done = true
+      if (top.isEmpty || top.head.getLong(2) < minCount) None
       else {
         val (a, b) = (top.head.getString(0), top.head.getString(1))
         merges += Merge(a, b, rank)
-        words = words
-          .select(applyMerge(col("syms"), a, b).as("syms"), col("freq"))
-          .localCheckpoint(true)
         rank += 1
+        Some(words.select(applyMerge(col("syms"), a, b).as("syms"), col("freq")))
       }
-    }
+    }()
+    Iterate.release(last)
     merges.result()
   }
 

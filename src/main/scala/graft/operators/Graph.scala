@@ -34,13 +34,16 @@ object Graph {
   private val CkptLevel =
     org.apache.spark.storage.StorageLevel.DISK_ONLY
 
-  /** The degree-annotated edge checkpoint of the LAST [[pageRank]]
-    * call — it backs the returned frame's lineage, so it cannot be
-    * unpersisted inside the call; the next call swaps it out
-    * (same convention as dupClusters' clusterCache).
+  /** Distinct (src, dst) edges in both directions of an undirected
+    * pair list, from ONE scan of the (possibly expensive) pair plan —
+    * a unionByName with itself would execute it twice.
     */
-  private val edgeCache =
-    new java.util.concurrent.atomic.AtomicReference[Option[DataFrame]](None)
+  private def symmetric(pairs: DataFrame, idA: String, idB: String): DataFrame =
+    pairs.select(explode(array(
+        struct(col(idA).as("src"), col(idB).as("dst")),
+        struct(col(idB).as("src"), col(idA).as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+      .distinct()
 
   /** Fixed-point unit: ranks are maintained as BIGINT multiples of
     * 1e-12. 1e12 · n fits a long for any realistic vertex count the
@@ -83,18 +86,12 @@ object Graph {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(dampingPct > 0 && dampingPct < 100,
       s"dampingPct must be in 1..99, got $dampingPct")
-    edgeCache.getAndSet(None).foreach(_.unpersist(false))
-    // both directions from ONE scan of the (possibly expensive) pair
-    // plan — a unionByName with itself would execute it twice
-    val sym = pairs.select(explode(array(
-        struct(col(idA).as("src"), col(idB).as("dst")),
-        struct(col(idB).as("src"), col(idA).as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .distinct()
+    val sym = symmetric(pairs, idA, idB)
     val deg = sym.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val edges = sym.join(deg.hint("shuffle_hash"), Seq("src"))
-      .localCheckpoint(true, CkptLevel)
-    edgeCache.set(Some(edges))
+    // checkpointed through the iteration runner: the returned frame's
+    // lineage reads it, so it lives as long as the caller holds that
+    val edges = Iterate.checkpoint(
+      sym.join(deg.hint("shuffle_hash"), Seq("src")), CkptLevel)
     val nFrame = edges.select(col("src")).distinct()
       .agg(count(lit(1)).as("n"))
     val teleport = (100 - dampingPct) * FpUnit // < 1e14 — fits long
@@ -138,12 +135,6 @@ object Graph {
     */
   val CensusMaxBucketSize: Int = 300
 
-  /** Degree-annotated edge checkpoint of the LAST [[triangleStats]]
-    * call (same lifecycle convention as [[pageRank]]'s edgeCache).
-    */
-  private val triCache =
-    new java.util.concurrent.atomic.AtomicReference[Option[DataFrame]](None)
-
   /** Per-node triangle statistics over an UNDIRECTED pair list:
     * undirected degree, number of triangles through the node, and the
     * local clustering coefficient `2·tri / (deg·(deg−1))`.
@@ -174,38 +165,31 @@ object Graph {
     * all-duplicates-corpus OOM reason [[pageRank]] documents.
     */
   def triangleStats(pairs: DataFrame, idA: String, idB: String): DataFrame = {
-    triCache.getAndSet(None).foreach(_.unpersist(false))
     // stage 1: the upstream pair plan (LSH banding, typically the
     // expensive part) executes EXACTLY ONCE into a serialized
     // checkpoint — the degree aggregate and the orientation join
     // both read it, and without the cut the band pipeline would run
     // once per consumer
-    val sym = pairs.select(explode(array(
-        struct(col(idA).as("src"), col(idB).as("dst")),
-        struct(col(idB).as("src"), col(idA).as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .distinct()
-      .localCheckpoint(true, CkptLevel)
+    val sym = Iterate.checkpoint(symmetric(pairs, idA, idB), CkptLevel)
     val deg0 = sym.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
     // orient src→dst iff (deg(src), src) < (deg(dst), dst): each
     // undirected edge survives exactly once, pointing "up" the total
     // order. Both endpoint-degree lookups are one shuffled-hash join
     // each against the O(n) degree frame.
-    val oriented = sym
+    val oriented = Iterate.checkpoint(sym
       .join(deg0.select(col("node").as("src"), col("deg").as("dsrc"))
         .hint("shuffle_hash"), Seq("src"))
       .join(deg0.select(col("node").as("dst"), col("deg").as("ddst"))
         .hint("shuffle_hash"), Seq("dst"))
       .filter(col("dsrc") < col("ddst") ||
         (col("dsrc") === col("ddst") && col("src") < col("dst")))
-      .select(col("src").as("lo"), col("dst").as("hi"))
-      .localCheckpoint(true, CkptLevel)
+      .select(col("src").as("lo"), col("dst").as("hi")), CkptLevel)
     // oriented is materialized (eager checkpoint): the symmetric
     // frame has no remaining consumer — undirected degree re-derives
     // from oriented as out+in (each undirected edge appears exactly
-    // once) — so its blocks can go now
-    sym.unpersist(false)
-    triCache.set(Some(oriented))
+    // once) — so its blocks can go now. oriented itself backs the
+    // returned frame and lives as long as the caller holds it.
+    Iterate.release(sym)
     val deg = oriented
       .select(explode(array(col("lo"), col("hi"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))

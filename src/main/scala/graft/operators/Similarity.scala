@@ -272,31 +272,42 @@ object Similarity {
     val vecs = graft.sources.Tables.spreadScan(
       base.select(col(idCol).as("vid"), col(vecCol).cast("array<double>").as("v")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var centroids: Seq[(Int, Seq[Double])] =
-      vecs.orderBy(col("vid")).limit(k).collect().toSeq
-        .zipWithIndex.map { case (r, i) => i -> r.getSeq[Double](1) }
+    var centroids: IndexedSeq[Array[Double]] =
+      vecs.orderBy(col("vid")).limit(k).collect().toIndexedSeq
+        .map(_.getSeq[Double](1).toArray)
     try for (_ <- 1 to iters) {
       // centroids live on the driver between rounds, so assignment is
       // the map-only literal argmax — each round is ONE job with ONE
       // shuffle (the per-(cell, dim) mean agg), no window over a
       // crossJoin
-      val cents = centroids.map { case (cid, v) => cid.toLong -> v.toArray }
-      val cells = assignNearest(
-        vecs.withColumn("_norm", l2Norm(col("v"))), "v", "_norm", cents)
-        .select(col("centroid_id"), col("v"))
-      val means = cells
-        .select(col("centroid_id"), posexplode(col("v")).as(Seq("pos", "x")))
-        .groupBy("centroid_id", "pos")
-        .agg((sum(col("x").cast("decimal(38,12)")).cast("double") /
-          count(lit(1))).as("m"))
-        .collect()
-      val byCell = means.groupBy(_.getLong(0).toInt).map { case (cid, rows) =>
-        cid -> rows.sortBy(_.getInt(1)).map(_.getDouble(2)).toSeq
-      }
-      // empty cells keep their previous centroid
-      centroids = centroids.map { case (cid, old) => cid -> byCell.getOrElse(cid, old) }
+      val cells = assignNearest(vecs.withColumn("_norm", l2Norm(col("v"))),
+        "v", "_norm", centroids.zipWithIndex.map { case (v, i) => i.toLong -> v })
+      centroids = lloydStep(cells, col("centroid_id"), col("v"), centroids)
     } finally vecs.unpersist(blocking = false)
-    centroids.toDF("centroid_id", "centroid_vec")
+    centroids.zipWithIndex.map { case (v, i) => i -> v.toSeq }
+      .toDF("centroid_id", "centroid_vec")
+  }
+
+  /** One Lloyd update, shared by [[kmeansCentroids]] and
+    * [[pqCodebooks]]: cell c's new centre is the per-position mean of
+    * `vec` over the rows whose `cell` is c — one (cell, pos) aggregate
+    * through an exact decimal sum (partitioning-invariant, so the
+    * DuckDB oracle's unrolled CTEs reproduce it bit-for-bit),
+    * collected and regrouped by cell on the driver. A cell no row
+    * lands in keeps its old centre. `cell` indexes `old`.
+    */
+  private def lloydStep(members: DataFrame, cell: Column, vec: Column,
+                        old: IndexedSeq[Array[Double]]): IndexedSeq[Array[Double]] = {
+    val means = members
+      .select(cell.cast("int").as("_cell"), posexplode(vec).as(Seq("_pos", "_x")))
+      .groupBy("_cell", "_pos")
+      .agg((sum(col("_x").cast("decimal(38,12)")).cast("double") /
+        count(lit(1))).as("_m"))
+      .collect()
+    val byCell = means.groupBy(_.getInt(0)).map { case (c, rows) =>
+      c -> rows.sortBy(_.getInt(1)).map(_.getDouble(2))
+    }
+    old.indices.map(c => byCell.getOrElse(c, old(c)))
   }
 
   /** IVF (inverted-file) ANN: candidates are assigned to their
@@ -674,29 +685,22 @@ object Similarity {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val seed = vecs.orderBy(col("vid")).limit(codebookK).collect()
       .map(_.getSeq[Double](1).toArray)
-    var books: Seq[Seq[Array[Double]]] = (0 until m).map(j =>
-      seed.toSeq.map(v => v.slice(j * dsub, (j + 1) * dsub)))
+    // the m codebooks as ONE flat cell space, subspace j's codeword c
+    // at cell j·k + c, so one Lloyd step updates every subspace
+    val k = seed.length
+    var books: IndexedSeq[Array[Double]] = (0 until m).flatMap(j =>
+      seed.toIndexedSeq.map(v => v.slice(j * dsub, (j + 1) * dsub)))
+    def book(j: Int) = books.slice(j * k, (j + 1) * k)
     try for (_ <- 1 to iters) {
       val coded = (0 until m).foldLeft(vecs) { (acc, j) =>
-        assignSubCode(acc, "v", j, dsub, books(j))
+        assignSubCode(acc, "v", j, dsub, book(j))
       }
       val perSub = (0 until m).map(j =>
-        coded.select(lit(j).as("sub"), col(s"_code_$j").as("cell"),
-          posexplode(slice(col("v"), j * dsub + 1, dsub)).as(Seq("pos", "x"))))
-      val means = perSub.reduce(_ unionAll _)
-        .groupBy("sub", "cell", "pos")
-        .agg((sum(col("x").cast("decimal(38,12)")).cast("double") /
-          count(lit(1))).as("m"))
-        .collect()
-      val byKey = means.groupBy(r => (r.getInt(0), r.getInt(1)))
-        .map { case (k2, rows) =>
-          k2 -> rows.sortBy(_.getInt(2)).map(_.getDouble(3)).toArray
-        }
-      books = (0 until m).map(j => books(j).zipWithIndex.map {
-        case (old, cid) => byKey.getOrElse((j, cid), old)
-      })
+        coded.select((col(s"_code_$j") + j * k).as("cell"),
+          slice(col("v"), j * dsub + 1, dsub).as("sv")))
+      books = lloydStep(perSub.reduce(_ unionAll _), col("cell"), col("sv"), books)
     } finally vecs.unpersist(blocking = false)
-    books
+    (0 until m).map(book)
   }
 
   /** PQ-encode: `m` byte-sized code columns per vector, one map-only

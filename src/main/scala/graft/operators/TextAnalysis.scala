@@ -654,6 +654,39 @@ object TextAnalysis {
             col("_total").cast("double"), 4))
       .drop("_norm", "_total")
 
+  /** (id, `_segs`): each doc's normalized text cut into
+    * position-aligned non-overlapping `segTokens`-token segments —
+    * the segmentation [[boilerplateScrub]] and
+    * [[TextDedup.substringScrub]] share. Staged once PRE-explode: both
+    * scrubs' consumers re-derive from the segment arrays — uncached,
+    * the 3-regex normalization and segmentation would run twice over
+    * the corpus. Caching before the explode keeps the cached footprint
+    * at one array row per doc (the exploded stream is ~segTokens×
+    * larger); the explode itself is cheap. Serialized storage for
+    * truthful size stats (see the X19 broadcast-trap post-mortem).
+    * Self-releasing: the scrubs return LAZY frames, so they can't
+    * try/finally around the caller's action — the cache goes as soon
+    * as the first query that consumed it completes, and a long-lived
+    * session never accumulates cached corpora across calls
+    * (kmeansCentroids/pqCodebooks collect eagerly and release in
+    * `finally`; this is the lazy-path twin).
+    */
+  private[operators] def cachedSegments(df: DataFrame, idCol: String,
+                                        textCol: String, segTokens: Int): DataFrame = {
+    require(segTokens >= 1, s"segTokens must be >= 1, got $segTokens")
+    val nseg = ceil(size(col("_toks")).cast("double") / segTokens).cast("int")
+    val segged = df
+      .select(col(idCol), col(textCol))
+      .withColumn("_toks", split(normalizeText(col(textCol)), " "))
+      .withColumn("_segs",
+        transform(sequence(lit(0), greatest(nseg - 1, lit(0))),
+          i => array_join(slice(col("_toks"), i * segTokens + 1, lit(segTokens)), " ")))
+      .select(col(idCol), col("_segs"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    Iterate.releaseAfterFirstRead(segged)
+    segged
+  }
+
   /** Corpus-frequency boilerplate scrub (the ACROSS-document sibling
     * of [[repetitionRatio]]'s within-document signal — C4, Raffel et
     * al. 2020, arXiv:1910.10683 §2.2 dedups three-sentence spans
@@ -688,54 +721,8 @@ object TextAnalysis {
     */
   def boilerplateScrub(df: DataFrame, idCol: String, textCol: String,
                        segTokens: Int = 8, minDocs: Int = 10): DataFrame = {
-    require(segTokens >= 1, s"segTokens must be >= 1, got $segTokens")
     require(minDocs >= 2, s"minDocs must be >= 2, got $minDocs")
-    val toks = split(normalizeText(col(textCol)), " ")
-    val nseg = ceil(size(col("_toks")).cast("double") / segTokens).cast("int")
-    // staged once PRE-explode: both consumers below (dictionary count
-    // + anti-join stream) re-derive from the segment arrays — uncached,
-    // the 3-regex normalization and segmentation would run twice over
-    // the corpus. Caching before the explode keeps the cached footprint
-    // at one array row per doc (the exploded stream is ~segTokens×
-    // larger); the explode itself is cheap. Serialized storage for
-    // truthful size stats (see the X19 broadcast-trap post-mortem).
-    val segged = df
-      .select(col(idCol), col(textCol))
-      .withColumn("_toks", toks)
-      .withColumn("_segs",
-        transform(sequence(lit(0), greatest(nseg - 1, lit(0))),
-          i => array_join(slice(col("_toks"), i * segTokens + 1, lit(segTokens)), " ")))
-      .select(col(idCol), col("_segs"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    // Self-releasing cache: the result is returned LAZILY, so the
-    // operator can't try/finally around the caller's action — instead
-    // a one-shot listener unpersists the segment cache as soon as the
-    // first query that consumed it completes (success OR failure).
-    // persist() is itself lazy, so if the caller never materializes,
-    // no blocks were ever cached and the pending listener holds only
-    // an object — a long-lived session never accumulates cached
-    // corpora across calls (kmeansCentroids/pqCodebooks collect
-    // eagerly and release in `finally`; this is the lazy-path twin).
-    val session = df.sparkSession
-    val seggedPlan = segged.queryExecution.analyzed
-    val listener: org.apache.spark.sql.util.QueryExecutionListener =
-      new org.apache.spark.sql.util.QueryExecutionListener {
-        private val done = new java.util.concurrent.atomic.AtomicBoolean(false)
-        private def maybeRelease(
-            qe: org.apache.spark.sql.execution.QueryExecution): Unit =
-          if (qe.analyzed.exists(_.sameResult(seggedPlan)) &&
-              done.compareAndSet(false, true)) {
-            segged.unpersist(false)
-            session.listenerManager.unregister(this)
-          }
-        override def onSuccess(name: String,
-            qe: org.apache.spark.sql.execution.QueryExecution,
-            durationNs: Long): Unit = maybeRelease(qe)
-        override def onFailure(name: String,
-            qe: org.apache.spark.sql.execution.QueryExecution,
-            error: Exception): Unit = maybeRelease(qe)
-      }
-    session.listenerManager.register(listener)
+    val segged = cachedSegments(df, idCol, textCol, segTokens)
     // compact exploded stream: the segment string is hashed AT the
     // explode and never travels — exchanges carry (id, pos, long).
     // Empty segments (split of empty text) are excluded here outright:

@@ -125,9 +125,9 @@ object TextDedup {
     * everywhere else; each document is reassembled in order.
     * Documents that lose every segment (pure duplicates) drop out.
     *
-    * Scale shape: segmentation is a scan-side array projection staged
-    * once pre-explode (array-per-doc cache footprint, as
-    * [[graft.operators.TextAnalysis.boilerplateScrub]]); the
+    * Scale shape: segmentation is
+    * [[graft.operators.TextAnalysis.cachedSegments]] (the
+    * boilerplateScrub staging, released after the first read); the
     * canonical table is ONE (segment)-keyed aggregate — count +
     * min(struct(doc, pos)), both with map-side partials, so a
     * boilerplate segment recurring a billion times combines locally
@@ -139,17 +139,7 @@ object TextDedup {
     */
   def substringScrub(df: DataFrame, idCol: String, textCol: String,
                      segTokens: Int = 8): DataFrame = {
-    require(segTokens >= 1, s"segTokens must be >= 1, got $segTokens")
-    val toks = split(normalizeText(col(textCol)), " ")
-    val nseg = ceil(size(col("_toks")).cast("double") / segTokens).cast("int")
-    val segged = df
-      .select(col(idCol), col(textCol))
-      .withColumn("_toks", toks)
-      .withColumn("_segs",
-        transform(sequence(lit(0), greatest(nseg - 1, lit(0))),
-          i => array_join(slice(col("_toks"), i * segTokens + 1, lit(segTokens)), " ")))
-      .select(col(idCol), col("_segs"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    val segged = TextAnalysis.cachedSegments(df, idCol, textCol, segTokens)
     val ex = segged
       .withColumn("_nseg", size(col("_segs")).cast("long"))
       .select(col(idCol), col("_nseg"),
@@ -739,8 +729,10 @@ object TextDedup {
 
   /** Frames persisted by the LAST [[ngramJaccardPairsPrefix]] call,
     * unpersisted (non-blocking) on the next — repeated invocations in
-    * one session hold at most one invocation's disk blocks.
-    * Unpersisting a frame a still-lazy prior result depends on only
+    * one session hold at most one invocation's disk blocks. These are
+    * `persist`ed through the CacheManager, so the swap does free them
+    * (checkpoint frames need [[Iterate.release]] instead), and
+    * unpersisting a frame a still-lazy prior result depends on only
     * costs recomputation, never correctness.
     */
   private val prefixCaches =
@@ -907,6 +899,16 @@ object TextDedup {
 
   // ───────────────── duplicate clustering (components) ─────────────────
 
+  /** Checkpoint storage for the fixpoint rounds: SERIALIZED blocks.
+    * The default deserialized MEMORY_AND_DISK level pins row objects
+    * in storage memory; at 30× the accumulated round blocks squeezed
+    * the execution pool until a hash aggregate could not obtain its
+    * minimum pages (AGGREGATE_OUT_OF_MEMORY). Serialized blocks are
+    * several times smaller and give pages back to execution.
+    */
+  private val CkptLevel =
+    org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
+
   /** Connected components over a near-dup pair list — the step between
     * pair generation (LSH/Jaccard/simhash) and survivorship: every doc
     * in a transitive duplicate group gets the group's minimum id as
@@ -918,36 +920,19 @@ object TextDedup {
     * Scale: each round is one hash-shuffle join (self-looped edges ⋈
     * labels on the neighbor key) + one min-agg — two shuffles total;
     * rounds needed = component diameter, and near-dup components are
-    * band-join near-cliques (diameter ≲ 3) — not long chains. Each
-    * round's result is EAGERLY local-checkpointed: without lineage
-    * truncation the logical plan compounds per round and the analyzer
-    * (not the data) blows the heap after ~10 rounds. Local
-    * checkpoints keep iteration cost flat; on a real cluster prefer
+    * band-join near-cliques (diameter ≲ 3) — not long chains. The
+    * rounds run on the [[Iterate]] runner: each round's result is
+    * EAGERLY local-checkpointed (without lineage truncation the
+    * logical plan compounds per round and the analyzer, not the data,
+    * blows the heap after ~10 rounds) and the round it replaces is
+    * released. The returned frame reads the last round's checkpoint,
+    * freed once the caller drops it. On a real cluster prefer
     * reliable `checkpoint()` (executor loss recovery). If components
     * WERE long paths, switch to large-star/small-star (alternating
     * min-propagation that squares path lengths per round) on the
     * identical frame contract.
     */
-  /** Checkpoint storage for the fixpoint rounds: SERIALIZED blocks.
-    * The default deserialized MEMORY_AND_DISK level pins row objects
-    * in storage memory; at 30× the accumulated round blocks squeezed
-    * the execution pool until a hash aggregate could not obtain its
-    * minimum pages (AGGREGATE_OUT_OF_MEMORY). Serialized blocks are
-    * several times smaller and give pages back to execution.
-    */
-  private val CkptLevel =
-    org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-
-  /** The final labels checkpoint of the LAST [[dupClusters]] call —
-    * it backs the returned frame so it cannot be unpersisted inside
-    * the call; the next call swaps it out, bounding resident blocks
-    * to one invocation (same convention as the PPJoin caches).
-    */
-  private val clusterCache =
-    new java.util.concurrent.atomic.AtomicReference[Option[DataFrame]](None)
-
   def dupClusters(pairs: DataFrame, maxIters: Int = 50): DataFrame = {
-    clusterCache.getAndSet(None).foreach(_.unpersist(false))
     // Both edge directions PLUS a self-loop per vertex: with
     // self-loops, one join+min-agg computes least(own, neighbors')
     // directly — the round is TWO shuffles (join on dst, agg on src),
@@ -960,15 +945,15 @@ object TextDedup {
     // LogicalRDD does not surface its hash partitioning to
     // EnsureRequirements, so the join re-exchanged anyway and the
     // extra preamble shuffle bought nothing — reverted.)
-    val edges = pairs.select(explode(array(
+    val edges = Iterate.checkpoint(pairs.select(explode(array(
         struct(col("id_1").as("src"), col("id_2").as("dst")),
         struct(col("id_2").as("src"), col("id_1").as("dst")),
         struct(col("id_1").as("src"), col("id_1").as("dst")),
         struct(col("id_2").as("src"), col("id_2").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .distinct().localCheckpoint(true, CkptLevel)
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("cluster_id", col("id")).localCheckpoint(true, CkptLevel)
+      .distinct(), CkptLevel)
+    val start = Iterate.checkpoint(edges.select(col("src").as("id")).distinct()
+      .withColumn("cluster_id", col("id")), CkptLevel)
     // Convergence probe: labels only ever DECREASE, so the label sum
     // is strictly monotone until fixpoint — equal sums across a round
     // prove zero changes with one cheap agg over the checkpointed
@@ -977,66 +962,62 @@ object TextDedup {
     def signature(df: DataFrame): java.math.BigDecimal =
       df.agg(org.apache.spark.sql.functions.sum(
         col("cluster_id").cast("decimal(38,0)")).as("s")).head.getDecimal(0)
-    var sig = signature(labels)
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIters) {
-      // neighbor-min step (self-loops make it least(own, neighbors')).
-      // The labels side carries the shuffle-hash hint: it is the O(V)
-      // build side; the checkpointed edge list streams through
-      // without a sort-merge's per-round sort.
-      // nmin is deliberately NOT materialized, although the pointer
-      // jump's self-join makes the edges⋈labels+agg subtree execute
-      // twice per round. Every materialization scheme was measured in
-      // r16 and reverted: (a) localCheckpoint(nmin) — a checkpoint
-      // COPIES the origin plan's estimated stats into its LogicalRDD
-      // (LogicalRDD.rewriteStatsAndConstraints), and the estimate is
-      // a PRODUCT over join children, so round i+1's estimate squares
-      // round i's — by round ~20 the driver was multiplying
-      // million-bit BigIntegers inside Catalyst stats estimation
-      // (thread-dump-measured: 337 s of driver CPU in
-      // BigInteger.multiplyToomCook3, 5× the whole 100× query);
-      // (b) persist(nmin)+count per round — wall-NEUTRAL at the 100×
-      // corpus (the duplicated subtree it saves is offset by the
-      // extra materializing job + cache churn) and +50% at sf0.1,
-      // where rounds are sub-second and the added per-round job
-      // latency dominates (bench: dd_dup_clusters 5.1 → 7.8 s,
-      // dd_neardup_result 4.8 → 7.5 s); (c) folding the convergence
-      // signature into the materializing agg (skip the final jump) —
-      // ~15% slower at 100×, one extra confirming round. The
-      // duplicated subtree is the cheapest of the three evils at both
-      // scales.
-      // pointer-jump step: label' = label(label(id)). Every label IS a
-      // vertex id (a min over ids) and every vertex appears in nmin
-      // (self-loop), so the lookup always hits; the jump squares the
-      // propagation distance per round — chains converge in O(log d)
-      // rounds instead of O(d) (measured 16 → 5 on the 10× corpus).
-      // A SECOND jump per round was tried in r15 and reverted:
-      // convergence here is edge-hop-bound (the min advances one graph
-      // hop per neighbor-min step), so it saved only one round
-      // (10 → 9 at sf0.1) while re-computing the first jump's subtree
-      // twice per round — net +19% wall in the bench.
+    // One round: neighbor-min step (self-loops make it
+    // least(own, neighbors')). The labels side carries the
+    // shuffle-hash hint: it is the O(V) build side; the checkpointed
+    // edge list streams through without a sort-merge's per-round sort.
+    // nmin is deliberately NOT materialized, although the pointer
+    // jump's self-join makes the edges⋈labels+agg subtree execute
+    // twice per round. Every materialization scheme was measured in
+    // r16 and reverted: (a) checkpointing nmin — a checkpoint
+    // COPIES the origin plan's estimated stats into its LogicalRDD
+    // (LogicalRDD.rewriteStatsAndConstraints), and the estimate is
+    // a PRODUCT over join children, so round i+1's estimate squares
+    // round i's — by round ~20 the driver was multiplying
+    // million-bit BigIntegers inside Catalyst stats estimation
+    // (thread-dump-measured: 337 s of driver CPU in
+    // BigInteger.multiplyToomCook3, 5× the whole 100× query);
+    // (b) persist(nmin)+count per round — wall-NEUTRAL at the 100×
+    // corpus (the duplicated subtree it saves is offset by the
+    // extra materializing job + cache churn) and +50% at sf0.1,
+    // where rounds are sub-second and the added per-round job
+    // latency dominates (bench: dd_dup_clusters 5.1 → 7.8 s,
+    // dd_neardup_result 4.8 → 7.5 s); (c) folding the convergence
+    // signature into the materializing agg (skip the final jump) —
+    // ~15% slower at 100×, one extra confirming round. The
+    // duplicated subtree is the cheapest of the three evils at both
+    // scales.
+    // pointer-jump step: label' = label(label(id)). Every label IS a
+    // vertex id (a min over ids) and every vertex appears in nmin
+    // (self-loop), so the lookup always hits; the jump squares the
+    // propagation distance per round — chains converge in O(log d)
+    // rounds instead of O(d) (measured 16 → 5 on the 10× corpus).
+    // A SECOND jump per round was tried in r15 and reverted:
+    // convergence here is edge-hop-bound (the min advances one graph
+    // hop per neighbor-min step), so it saved only one round
+    // (10 → 9 at sf0.1) while re-computing the first jump's subtree
+    // twice per round — net +19% wall in the bench.
+    def round(labels: DataFrame): DataFrame = {
       val nmin = edges
         .join(labels.select(col("id").as("dst"), col("cluster_id").as("_nl"))
           .hint("shuffle_hash"), "dst")
         .groupBy(col("src").as("id")).agg(min("_nl").as("cluster_id"))
       val parent = nmin.select(col("id").as("_pid"), col("cluster_id").as("_pl"))
-      val next = nmin.join(parent, nmin("cluster_id") === parent("_pid"), "left")
+      nmin.join(parent, nmin("cluster_id") === parent("_pid"), "left")
         .select(nmin("id"),
           coalesce(col("_pl"), nmin("cluster_id")).as("cluster_id"))
-        .localCheckpoint(true, CkptLevel)
-      val nextSig = signature(next)
-      converged = nextSig.compareTo(sig) == 0
-      sig = nextSig
-      labels.unpersist(blocking = false) // drop the superseded checkpoint blocks
-      labels = next
-      iter += 1
     }
-    edges.unpersist(blocking = false)
-    System.err.println(s"[dupClusters] converged=$converged rounds=$iter")
+    var sig = signature(start)
+    val (labels, converged) = Iterate.fixpoint("dupClusters", start,
+        CkptLevel, maxIters)(cur => Some(round(cur))) { next =>
+      val nextSig = signature(next)
+      val same = nextSig.compareTo(sig) == 0
+      sig = nextSig
+      same
+    }
+    Iterate.release(edges)
     require(converged, s"dupClusters did not converge in $maxIters rounds " +
       "— components are pathological chains; use star-contraction here")
-    clusterCache.set(Some(labels))
     labels.select(col("id").as("doc_id"), col("cluster_id"))
   }
 

@@ -124,8 +124,11 @@ object FileStatsIndex {
       if (f.getPath.getName.endsWith(".parquet"))
         listed += f.getPath.getName -> f.getPath.toUri.toString
     }
-    val existing = Tables.parquet(spark, indexPath(tablePath))
-      .localCheckpoint(true) // the swap below replaces the files this frame reads
+    // snapshot at localCheckpoint's default level: the swap below
+    // replaces the files this frame reads
+    val existing = graft.operators.Iterate.checkpoint(
+      Tables.parquet(spark, indexPath(tablePath)),
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val indexed = existing.select("file").collect()
       .map(r => baseName(r.getString(0))).toSet
     val newPaths = (listed.keySet -- indexed).toSeq.sorted.map(listed)
@@ -149,7 +152,7 @@ object FileStatsIndex {
           .groupBy(input_file_name().as("file"))
           .agg(aggs.head, aggs.tail: _*))
     graft.operators.Scd2.writeAtomic(updated.coalesce(1), indexPath(tablePath))
-    existing.unpersist(false)
+    graft.operators.Iterate.release(existing)
     newPaths.length
   }
 
