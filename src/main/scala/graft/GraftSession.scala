@@ -18,6 +18,13 @@ import scala.util.control.NonFatal
   *    expressions (poly_hash64, minhash_sigs, packed_shingles,
   *    jaccard_sorted) as SQL functions.
   *  - A 1000-entry generated-class cache (see [[CodegenCacheEntries]]).
+  *  - A fork-free `file://`: `spark.hadoop.fs.file.impl` and
+  *    `spark.hadoop.fs.AbstractFileSystem.file.impl` name
+  *    [[graft.sources.NioLocalFileSystem]] and [[graft.sources.NioLocalFs]],
+  *    which set file modes through java.nio where Hadoop would run one
+  *    `chmod` process per file. Hadoop caches one `FileSystem` per
+  *    scheme and user, first come, so this holds when an engine session
+  *    is the first in its JVM to touch `file://`.
   *
   * `spark.sql.shuffle.partitions` defaults to the cluster's core
   * count when given (local mode: pass the parallelism you run with —
@@ -55,6 +62,10 @@ object GraftSession {
         "262144")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.sources.NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.sources.NioLocalFs].getName)
     val withMaster = master.fold(b)(b.master)
     shufflePartitions.fold(withMaster)(n =>
       withMaster.config("spark.sql.shuffle.partitions", n))

@@ -169,26 +169,17 @@ object Micro {
       }
     }
 
-    // generic registered-query timing: `Micro <dir> query <name>...`
-    // (2 runs, min) — for one-off scale probes without a full sweep.
-    // Each run also reports total shuffle WRITE bytes (stage-summed via
-    // listener), the exchange-volume axis behind e.g. the md5-vs-xx64
-    // band-key adjudication: wall time says which is faster, shuffle
-    // bytes say WHY.
+    // generic registered-query timing, `Micro <dir> query <name>...`,
+    // for one-off scale probes without a full sweep. Each query runs
+    // once untimed (first JIT and codegen), then 3 timed runs, each
+    // printed: a fresh JVM's second run is still JIT warm-up, so a
+    // min-of-2 reads warm-up as steady state. Each run also reports
+    // total shuffle WRITE bytes (stage-summed via listener), the
+    // exchange-volume axis behind e.g. the md5-vs-xx64 band-key
+    // adjudication: wall time says which is faster, shuffle bytes say
+    // WHY.
     if (mode == "query") {
       val shuffleBytes = new java.util.concurrent.atomic.AtomicLong()
-      // listener events are async: drain the bus to a fence before
-      // resetting / reading the counter, so no run's bytes bleed into
-      // the next (ADVICE r14 — fixed sleeps could still race a late
-      // stage-completed event). listenerBus is private[spark] in
-      // Scala but public bytecode — plain reflection, no setAccessible.
-      def drainBus(): Unit =
-        try {
-          val bus = spark.sparkContext.getClass.getMethod("listenerBus")
-            .invoke(spark.sparkContext)
-          bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
-            .invoke(bus, java.lang.Long.valueOf(15000L))
-        } catch { case _: Exception => Thread.sleep(1000) } // best effort
       spark.sparkContext.addSparkListener(
         new org.apache.spark.scheduler.SparkListener {
           override def onStageCompleted(
@@ -196,20 +187,23 @@ object Micro {
             shuffleBytes.addAndGet(
               sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
         })
+      // drain the bus before resetting / reading the counter, so no
+      // run's bytes bleed into the next
+      def run(n: String): (Double, Long) = {
+        org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
+        shuffleBytes.set(0L)
+        val t0 = System.nanoTime()
+        SparkEntry.queries(n)(spark, sfDir)
+          .write.format("noop").mode("overwrite").save()
+        val sec = (System.nanoTime() - t0) / 1e9
+        org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
+        (sec, shuffleBytes.get())
+      }
       args.drop(2).foreach { n =>
-        val runs = (1 to 2).map { _ =>
-          drainBus()
-          shuffleBytes.set(0L)
-          val t0 = System.nanoTime()
-          SparkEntry.queries(n)(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-          val sec = (System.nanoTime() - t0) / 1e9
-          drainBus()
-          (sec, shuffleBytes.get())
-        }
-        val best = runs.minBy(_._1)
-        println(f"$n%-28s min=${best._1}%.3fs " +
-          f"shuffle_mb=${best._2 / 1048576.0}%.1f " +
+        run(n)
+        val runs = (1 to 3).map(_ => run(n))
+        println(f"$n%-28s median=${runs.map(_._1).sorted.apply(1)}%.3fs " +
+          f"shuffle_mb=${runs.head._2 / 1048576.0}%.1f " +
           f"runs=${runs.map(r => f"${r._1}%.2f").mkString(",")}")
       }
     }

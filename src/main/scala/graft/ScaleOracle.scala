@@ -1290,9 +1290,9 @@ object ScaleOracle {
     }
   }
 
-  /** verify() under a wall-clock cap with the same job-group
-    * cancellation Bench.timedRun uses: a check that exceeds the cap
-    * is cancelled and reported as an explicit capped skip instead of
+  /** verify() under a wall-clock cap: a check that exceeds the cap
+    * is cancelled (its job group, its thread interrupted) and
+    * reported as an explicit capped skip instead of
     * running unbounded (ADVICE r13 — auto-tier flagged checks are by
     * definition expensive at scale). Int.MaxValue = uncapped (the
     * spec / standalone-main path).
@@ -1317,11 +1317,20 @@ object ScaleOracle {
     runner.start()
     runner.join(math.max(1L, capSec * 1000L)) // join(0) would wait forever
     if (runner.isAlive) {
-      spark.sparkContext.cancelJobGroup(group)
       spark.streams.active.foreach { q =>
         try q.stop() catch { case _: Exception => () }
       }
-      runner.join(30000L)
+      // A group cancel reaches only the jobs running at that instant;
+      // the check submits its next job right after. Interrupt the check
+      // as well and cancel again until it has ended, so none of its
+      // jobs outlive the cap.
+      val drainBy = System.nanoTime + 30L * 1000000000L
+      while (runner.isAlive && System.nanoTime < drainBy) {
+        spark.sparkContext.cancelJobGroup(group)
+        runner.interrupt()
+        runner.join(500L)
+      }
+      spark.sparkContext.cancelJobGroup(group)
       Result(name, "skip", s"cap_exceeded_${capSec}s", capSec)
     } else Option(out.get).getOrElse(
       Result(name, "error", "check thread died without a result", capSec))

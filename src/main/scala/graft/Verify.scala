@@ -3,6 +3,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -47,11 +48,14 @@ object Verify {
     val spark = GraftSession.local("graft-verify", cpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    selected.foreach { case (name, fn) =>
-      try normalizeTimestamps(fn(spark, sfDir)).coalesce(1).write
-        .mode("overwrite").parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    val failures = selected.toSeq.flatMap { case (name, fn) =>
+      try {
+        normalizeTimestamps(fn(spark, sfDir)).coalesce(1).write
+          .mode("overwrite").parquet(s"$outDir/$name")
+        None
+      } catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name -> s"${e.getClass.getName}: ${e.getMessage}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -69,6 +73,10 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // every failed query, by name, beside the results: `[]` when none
+    Files.writeString(Paths.get(s"$outDir/failures.json"), failures
+      .map { case (k, m) => s"{${q("name")}: ${q(k)}, ${q("message")}: ${q(m)}}" }
+      .mkString("[", ",\n", "]"))
     // the driver-side cost of the run's generated classes
     val compiles =
       org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
@@ -77,6 +85,10 @@ object Verify {
       .filter(_.getName == "Metaspace").map(_.getUsage.getUsed).sum / 1048576.0
     System.err.println(f"[verify] ${selected.size} queries: $compiles codegen " +
       f"compiles, driver metaspace $metaspaceMb%.1f MB")
+    // the exit code stays 0: SURVEY §7.1 defines none for failed queries
+    System.err.println(s"[verify] ${failures.size} of ${selected.size} queries failed" +
+      (if (failures.isEmpty) "" else s": ${failures.map(_._1).mkString(", ")}") +
+      s" (see $outDir/failures.json)")
     spark.stop()
   }
 }

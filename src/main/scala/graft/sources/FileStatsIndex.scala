@@ -76,12 +76,20 @@ object FileStatsIndex {
     val stats = Tables.parquet(spark, indexPath(tablePath))
     val survivors = stats
       .filter(col(s"max_$c") >= lo && col(s"min_$c") <= hi)
-      .select("file").collect().map(_.getString(0))
-    if (survivors.isEmpty)
-      // empty survivor set: keep the table schema, read no rows
-      Tables.parquet(spark, tablePath).filter(lit(false))
-    else
-      spark.read.parquet(survivors: _*)
+      .select("file").collect().map(_.getString(0)).toSeq
+    readFiles(spark, tablePath, survivors)
+  }
+
+  /** `files` of the table at `tablePath`, read as the table is: with its
+    * resolved schema and its partition columns (`basePath`), so pruned
+    * and empty reads have the full read's columns and infer nothing.
+    * No files: the table's schema and no rows.
+    */
+  private def readFiles(spark: SparkSession, tablePath: String,
+                        files: Seq[String]): DataFrame = {
+    val table = Tables.parquet(spark, tablePath)
+    if (files.isEmpty) table.filter(lit(false))
+    else spark.read.schema(table.schema).option("basePath", tablePath).parquet(files: _*)
   }
 
   /** The file lists a predicate would read, with and without the
@@ -115,15 +123,9 @@ object FileStatsIndex {
   def refresh(spark: SparkSession, tablePath: String,
               cols: Seq[String]): Int = {
     require(cols.nonEmpty, "need at least one column to index")
-    val p = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val listed = scala.collection.mutable.Map.empty[String, String]
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet"))
-        listed += f.getPath.getName -> f.getPath.toUri.toString
-    }
+    val listed = Tables.leafFiles(spark, tablePath).map(_.getPath)
+      .filter(_.getName.endsWith(".parquet"))
+      .map(f => f.getName -> f.toUri.toString).toMap
     // snapshot at localCheckpoint's default level: the swap below
     // replaces the files this frame reads
     val existing = graft.operators.Iterate.checkpoint(
@@ -225,9 +227,7 @@ object FileStatsIndex {
     */
   def prunedPointRead(spark: SparkSession, tablePath: String, c: String,
                       value: Column): DataFrame = {
-    val (survivors, _) = bloomSurvivors(spark, tablePath, c, value)
-    if (survivors.isEmpty) Tables.parquet(spark, tablePath).filter(lit(false))
-    else spark.read.parquet(survivors: _*)
+    readFiles(spark, tablePath, bloomSurvivors(spark, tablePath, c, value)._1)
   }
 
   /** Audit pair for the bloom path: (files a point lookup opens,

@@ -1,6 +1,8 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 import org.apache.spark.sql.types.StructType
 
 import scala.util.control.NonFatal
@@ -23,76 +25,51 @@ object Tables {
   /** S1: parquet scan. Column pruning + predicate pushdown are
     * handled by Catalyst; callers should NOT pre-materialize.
     *
-    * The schema is resolved once per (session, path, inference confs,
-    * leaf-file snapshot) and later reads pass it to the reader, so they
-    * skip footer inference (a one-task Spark job per call). The snapshot
-    * lists every leaf file's name, length and mtime, so any rewrite of
-    * the path, through whatever writer, misses the cache: no sink needs
-    * to invalidate it. A miss returns the inferring read itself, so it
-    * costs one listing and nothing more. A path that cannot be listed
-    * (missing, a glob) takes the plain read and its error.
+    * The data schema comes from one footer read on the driver: the file
+    * Spark's own inference would open (the first data file by path), read
+    * by Spark's own footer code ([[FooterSchema]]). The reader is handed
+    * that schema, so no read runs a footer-inference job, and partition
+    * columns are still inferred from the paths. Every read sees the
+    * files as they are now: there is nothing to cache or invalidate.
+    * Where one footer cannot stand in for Spark's inference (the path
+    * cannot be listed, holds no data file, holds `_metadata` summaries,
+    * or `spark.sql.parquet.mergeSchema` is on), or it cannot be read,
+    * this is the plain inferring read, with Spark's own error.
     */
   def parquet(spark: SparkSession, path: String): DataFrame =
-    SchemaCache.key(spark, path) match {
+    footerSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
       case None => spark.read.parquet(path)
-      case Some(key) => SchemaCache.get(spark, key) match {
-        case Some(schema) => spark.read.schema(schema).parquet(path)
-        case None =>
-          val df = spark.read.parquet(path)
-          SchemaCache.put(spark, key, df.schema)
-          df
-      }
     }
 
-  /** Resolved parquet schemas, one bounded LRU map per session. Sessions
-    * are weak keys, so a stopped, unreferenced session is not kept alive.
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] =
+    // with mergeSchema on, inference merges every footer
+    if (spark.sessionState.conf.isParquetSchemaMergingEnabled) None
+    else try {
+      val files = leafFiles(spark, path)
+      // `_`-names Spark lists are summaries, which inference prefers
+      if (files.exists(_.getPath.getName.startsWith("_"))) None
+      else files.minByOption(_.getPath.toString).map(FooterSchema.read(spark, _))
+    } catch { case NonFatal(_) => None }
+
+  /** Every file under `path`, recursively, that Spark's file listing
+    * keeps, through `listStatus` (`listFiles` builds a
+    * `LocatedFileStatus`, which asks each local file for its mode).
+    * A file `path` lists as itself.
     */
-  private object SchemaCache {
-    private val MaxEntriesPerSession = 256
-    // confs that change what footer inference returns for the same files
-    private val inferenceConfs = Seq(
-      "spark.sql.legacy.parquet.nanosAsLong",
-      "spark.sql.parquet.inferTimestampNTZ.enabled",
-      "spark.sql.parquet.binaryAsString",
-      "spark.sql.parquet.int96AsTimestamp",
-      "spark.sql.parquet.mergeSchema",
-      "spark.sql.sources.partitionColumnTypeInference.enabled",
-      "spark.sql.caseSensitive")
+  def leafFiles(spark: SparkSession, path: String): Seq[FileStatus] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    def walk(p: Path): Seq[FileStatus] =
+      fs.listStatus(p).toSeq.filterNot(s => FooterSchema.hidden(s.getPath.getName))
+        .flatMap(s => if (s.isDirectory) walk(s.getPath) else Seq(s))
+    walk(root)
+  }
 
-    /** (path, inference confs, digest of the leaf-file listing). */
-    final case class Key(path: String, confs: Seq[Option[String]], files: String)
-
-    private val bySession =
-      new java.util.WeakHashMap[SparkSession, java.util.LinkedHashMap[Key, StructType]]()
-
-    def key(spark: SparkSession, path: String): Option[Key] =
-      try {
-        val p = new org.apache.hadoop.fs.Path(path)
-        val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-        val md = java.security.MessageDigest.getInstance("SHA-256")
-        val it = fs.listFiles(p, true)
-        while (it.hasNext) {
-          val f = it.next()
-          md.update(s"${f.getPath}\u0000${f.getLen}/${f.getModificationTime}\n"
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        }
-        Some(Key(path, inferenceConfs.map(spark.conf.getOption),
-          java.util.Base64.getEncoder.encodeToString(md.digest())))
-      } catch { case NonFatal(_) => None }
-
-    def get(spark: SparkSession, key: Key): Option[StructType] = synchronized {
-      Option(bySession.get(spark)).flatMap(m => Option(m.get(key)))
-    }
-
-    def put(spark: SparkSession, key: Key, schema: StructType): Unit = synchronized {
-      bySession.computeIfAbsent(spark, _ =>
-        new java.util.LinkedHashMap[Key, StructType](16, 0.75f, true) {
-          override def removeEldestEntry(
-              e: java.util.Map.Entry[Key, StructType]): Boolean =
-            size() > MaxEntriesPerSession
-        }).put(key, schema)
-      ()
-    }
+  /** Number and total bytes of the parquet data files under `path`. */
+  private def parquetFootprint(spark: SparkSession, path: String): (Int, Long) = {
+    val files = leafFiles(spark, path).filter(_.getPath.getName.endsWith(".parquet"))
+    (files.size, files.map(_.getLen).sum)
   }
 
   /** Read one of the driver's testdata tables from an sf dir. */
@@ -270,7 +247,7 @@ object Tables {
     */
   def latestPartition(spark: SparkSession, path: String, col: String): DataFrame = {
     import org.apache.spark.sql.functions.max
-    val df = spark.read.parquet(path)
+    val df = parquet(spark, path)
     val latest = df.agg(max(org.apache.spark.sql.functions.col(col))).head().get(0)
     df.filter(org.apache.spark.sql.functions.col(col) === latest)
   }
@@ -373,22 +350,15 @@ object Tables {
   def compact(spark: SparkSession, path: String,
               targetFileBytes: Long = 128L << 20,
               sortCols: Seq[String] = Nil): Int = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     // size RECURSIVELY: partitioned layouts keep their files in nested
     // key=value dirs, so a top-level-only listing would see bytes=0 and
     // silently compact a large table to one file
-    var bytes = 0L; var files = 0
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet")) { bytes += f.getLen; files += 1 }
-    }
+    val (files, bytes) = parquetFootprint(spark, path)
     val n = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
     // coalesce is narrow but collapses the upstream SCAN to n tasks; when
     // the compaction ratio is steep (many small files → few big ones) pay
     // one round-robin shuffle instead so the read keeps its parallelism
-    val df = spark.read.parquet(path)
+    val df = parquet(spark, path)
     import org.apache.spark.sql.functions.col
     val arranged =
       if (sortCols.nonEmpty)
@@ -416,18 +386,7 @@ object Tables {
                targetFileBytes: Long = 128L << 20,
                sortCols: Seq[String] = Nil,
                statsCols: Seq[String] = Nil): DataFrame = {
-    def footprint(): (Long, Long) = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      var bytes = 0L; var files = 0L
-      val it = fs.listFiles(p, true)
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.getPath.getName.endsWith(".parquet")) { bytes += f.getLen; files += 1 }
-      }
-      (files, bytes)
-    }
-    val (filesBefore, bytesBefore) = footprint()
+    val (filesBefore, bytesBefore) = parquetFootprint(spark, path)
     compact(spark, path, targetFileBytes, sortCols)
     val idxCols = if (statsCols.nonEmpty) statsCols else sortCols
     val rows: Long =
@@ -436,9 +395,9 @@ object Tables {
         parquet(spark, FileStatsIndex.indexPath(path))
           .agg(org.apache.spark.sql.functions.sum("n_rows")).head.getLong(0)
       } else parquet(spark, path).count()
-    val (filesAfter, bytesAfter) = footprint()
+    val (filesAfter, bytesAfter) = parquetFootprint(spark, path)
     import spark.implicits._
-    Seq((filesBefore, filesAfter, bytesBefore, bytesAfter, rows))
+    Seq((filesBefore.toLong, filesAfter.toLong, bytesBefore, bytesAfter, rows))
       .toDF("n_files_before", "n_files_after",
         "bytes_before", "bytes_after", "n_rows")
   }
@@ -587,16 +546,8 @@ object Tables {
     * file paths, sorted for determinism. Control-plane metadata —
     * O(files) driver-side, never data.
     */
-  def parquetManifest(spark: SparkSession, dir: String): Seq[String] = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    def walk(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
-      fs.listStatus(p).toSeq.flatMap { s =>
-        if (s.isDirectory) walk(s.getPath)
-        else if (s.getPath.getName.endsWith(".parquet")) Seq(s) else Seq.empty
-      }
-    walk(path).map(_.getPath.toString).sorted
-  }
+  def parquetManifest(spark: SparkSession, dir: String): Seq[String] =
+    leafFiles(spark, dir).map(_.getPath.toString).filter(_.endsWith(".parquet")).sorted
 
   /** S14: warehouse bulk load in the Redshift COPY shape
     * (`glue_jobs/nyc_curated_s3_to_redshift.py:60-73` — `COPY schema.

@@ -43,7 +43,7 @@ object VersionedTable {
     // count is read BACK from storage so the audit manifest records
     // what actually landed, not what the plan attempted (a parquet
     // count() reads only footers — cheap at any scale)
-    val count = spark.read.parquet(s"$base/v=$next").count()
+    val count = Tables.parquet(spark, s"$base/v=$next").count()
     import spark.implicits._
     Tables.writeJsonSingleFile(
       Seq((next, operation, count, asOf))
@@ -59,17 +59,20 @@ object VersionedTable {
 
   /** versionAsOf read (`delta_time_travel.py:14-19`). */
   def readVersion(spark: SparkSession, base: String, version: Int): DataFrame =
-    spark.read.parquet(s"$base/v=$version")
+    Tables.parquet(spark, s"$base/v=$version")
+
+  /** The columns of a `_history` manifest row, as [[write]] writes them. */
+  private val HistorySchema =
+    "version INT, operation STRING, record_count BIGINT, run_timestamp TIMESTAMP"
 
   /** DESCRIBE HISTORY (`delta_audit_read.py:20`): one audit row per
     * version, ascending. Reads the listed manifest dirs, not a glob: a
-    * glob read logs a FileNotFoundException WARN on every call.
+    * glob read logs a FileNotFoundException WARN on every call. The
+    * schema is given, so the read runs no inference job.
     */
   def history(spark: SparkSession, base: String): DataFrame =
-    spark.read.json(versions(s"$base/_history").map(v => s"$base/_history/v=$v"): _*)
-      .select(col("version").cast("int"), col("operation"),
-        col("record_count").cast("long"),
-        to_timestamp(col("run_timestamp")).as("run_timestamp"))
+    spark.read.schema(HistorySchema)
+      .json(versions(s"$base/_history").map(v => s"$base/_history/v=$v"): _*)
       .orderBy("version")
 
   /** Timestamp-based time travel: the newest version whose manifest

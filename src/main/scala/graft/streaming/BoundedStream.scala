@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -63,7 +64,7 @@ private[streaming] object BoundedStream {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) step(batch, batchId)
       })
-    spark.read.parquet(statePath)
+    Tables.parquet(spark, statePath)
   }
 
   private def drain(writer: DataStreamWriter[Row]): StreamingQuery = {

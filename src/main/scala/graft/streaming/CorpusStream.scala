@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.TextAnalysis
+import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -37,7 +38,7 @@ object CorpusStream {
                              queryName: String = "corpus_stream_gate"): DataFrame = {
     // file streams need an explicit schema: take it from a batch peek
     val stream = BoundedStream.fileStream(spark, docsPath,
-        spark.read.parquet(docsPath).schema, None)
+        Tables.parquet(spark, docsPath).schema, None)
       .select(col("doc_id"), col("lang"), col("text"))
     val gated = TextAnalysis.gopherRules(stream, "text", minWords = minWords)
       .filter(col("gopher_pass"))

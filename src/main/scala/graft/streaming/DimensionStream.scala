@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.Scd2
+import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -48,7 +49,7 @@ object DimensionStream {
   def scd2MergeAvailableNow(spark: SparkSession, feedDir: String,
                             dimPath: String, conf: Scd2.Config,
                             queryName: String = "scd2_stream_merge"): DataFrame =
-    BoundedStream.eachBatch(spark, feedDir, spark.read.parquet(feedDir).schema,
+    BoundedStream.eachBatch(spark, feedDir, Tables.parquet(spark, feedDir).schema,
         dimPath, queryName) { (batch, _) =>
       // asOf from the batch's own data: 1-row control-plane agg.
       // The cast reads a naive (TIMESTAMP_NTZ) change_ts, what
@@ -56,7 +57,7 @@ object DimensionStream {
       // under the UTC session it keeps the wall-clock value.
       val asOf = batch.agg(max(col("change_ts")).cast("timestamp"))
         .head.getTimestamp(0)
-      val target = spark.read.parquet(dimPath)
+      val target = Tables.parquet(spark, dimPath)
       val merged = Scd2.merge(target, batch.drop("change_ts"), conf, asOf)
       Scd2.writeAtomic(merged, dimPath)
     }
@@ -215,7 +216,7 @@ object DimensionStream {
   private def mergeEachBatch(spark: SparkSession, feedDir: String, statePath: String,
                              queryName: String)
                             (merge: (DataFrame, Option[DataFrame]) => DataFrame): DataFrame =
-    BoundedStream.eachBatch(spark, feedDir, spark.read.parquet(feedDir).schema,
+    BoundedStream.eachBatch(spark, feedDir, Tables.parquet(spark, feedDir).schema,
         statePath, queryName) { (batch, batchId) =>
       val lastApplied = Scd2.readSidecar(spark, statePath, "_last_batch_id")
         .map(_.trim.toLong).getOrElse(-1L)
@@ -223,7 +224,7 @@ object DimensionStream {
         val hp = new org.apache.hadoop.fs.Path(statePath)
         val prev =
           if (hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp))
-            Some(spark.read.parquet(statePath))
+            Some(Tables.parquet(spark, statePath))
           else None
         Scd2.writeAtomic(merge(batch, prev), statePath,
           sidecar = Map("_last_batch_id" -> batchId.toString))
@@ -261,7 +262,7 @@ object DimensionStream {
                            orderCols: Seq[String], opCol: String,
                            payloadCols: Seq[String],
                            queryName: String = "cdc_stream_apply"): DataFrame = {
-    val schema = spark.read.parquet(feedDir).schema
+    val schema = Tables.parquet(spark, feedDir).schema
     val stateCols = opCol +: payloadCols ++: orderCols
     // Bootstrap: an absent state table means "no keys yet" — seed an
     // empty table with the feed's column shape so the first
@@ -315,7 +316,7 @@ object DimensionStream {
       val latest = batch.groupBy(keys.map(col): _*)
         .agg(max_by(struct(stateCols.map(col): _*), ordState).as("_c"))
         .hint("shuffle_hash")
-      val state = spark.read.parquet(statePath)
+      val state = Tables.parquet(spark, statePath)
       val joined = state.join(latest, keys, "full_outer")
       // the incoming change wins only if STRICTLY newer — equal
       // order keeps state, which makes replay a no-op

@@ -80,6 +80,9 @@ class ScaleOracleSpec extends SparkSpec {
     val r = ScaleOracle.verifyCapped(spark, slow, "daily_revenue", sfDir,
       scaledDir, copies = 3, capSec = 2)
     assert(r.status == "skip" && r.detail == s"cap_exceeded_2s", r.toString)
+    // …and the capped check has ended: it runs no job after the cap
+    assert(!Thread.getAllStackTraces.keySet.toArray.exists(
+      _.asInstanceOf[Thread].getName == "scale-oracle-daily_revenue"))
     // …and an uncapped run through the same entrypoint still verifies
     val ok = ScaleOracle.verifyCapped(spark, queries, "daily_revenue", sfDir,
       scaledDir, copies = 3, capSec = Int.MaxValue)

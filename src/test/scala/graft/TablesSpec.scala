@@ -27,12 +27,16 @@ class TablesSpec extends SparkSpec {
     } finally sc.removeSparkListener(l)
   }
 
+  // The "parquet schema cache" cases keep the names they had under the
+  // per-session schema cache; they now pin the one-footer schema read
+  // that replaced it.
   test("parquet schema cache: a repeated read of an unchanged path runs no Spark job") {
     val dir = tmp() + "/t"
     Seq((1, "a"), (2, "b")).toDF("id", "s").write.parquet(dir)
-    // the job the cache saves: footer inference of a plain read
+    // the job the footer read saves: footer inference of a plain read
     assert(jobsDuring(spark.read.parquet(dir))._2 > 0)
-    val first = Tables.parquet(spark, dir)
+    val (first, firstJobs) = jobsDuring(Tables.parquet(spark, dir))
+    assert(firstJobs === 0)
     val (again, jobs) = jobsDuring(Tables.parquet(spark, dir))
     assert(jobs === 0)
     assert(again.schema === first.schema)
@@ -44,7 +48,8 @@ class TablesSpec extends SparkSpec {
     Seq((1, "a")).toDF("id", "s").write.parquet(dir)
     assert(Tables.parquet(spark, dir).columns === Array("id", "s"))
     Seq((2, "b", 2.5)).toDF("id", "s", "x").write.mode("overwrite").parquet(dir)
-    val df = Tables.parquet(spark, dir)
+    val (df, jobs) = jobsDuring(Tables.parquet(spark, dir))
+    assert(jobs === 0)
     assert(df.columns === Array("id", "s", "x"))
     assert(df.as[(Int, String, Double)].collect() === Array((2, "b", 2.5)))
   }
@@ -53,7 +58,8 @@ class TablesSpec extends SparkSpec {
     val dir = tmp() + "/t"
     Tables.writePartitioned(
       Seq((1, "2024-01-01"), (2, "2024-01-02")).toDF("id", "run_date"), dir, Seq("run_date"))
-    val first = Tables.parquet(spark, dir)
+    val (first, firstJobs) = jobsDuring(Tables.parquet(spark, dir))
+    assert(firstJobs === 0)
     val (again, jobs) = jobsDuring(Tables.parquet(spark, dir))
     assert(jobs === 0)
     assert(again.schema === first.schema)
@@ -99,6 +105,51 @@ class TablesSpec extends SparkSpec {
     val missing = tmp() + "/missing"
     val e = intercept[org.apache.spark.sql.AnalysisException](Tables.parquet(spark, missing))
     assert(e.getCondition === "PATH_NOT_FOUND")
+  }
+
+  test("parquet footer schema: equals Spark's inferred schema on every layout; " +
+    "summaries and mergeSchema take Spark's own inference") {
+    val mergeKey = "spark.sql.parquet.mergeSchema"
+    def plain(df: org.apache.spark.sql.DataFrame): String => Unit =
+      dir => df.write.parquet(dir)
+    // (name, writer, whether one footer stands in for Spark's inference)
+    val cases: Seq[(String, String => Unit, Boolean)] = Seq(
+      ("partitioned", dir => Tables.writePartitioned(
+        Seq((1, 10L, "x"), (2, 20L, "y")).toDF("id", "year", "s"), dir, Seq("year", "s")), true),
+      ("nested struct/array", plain(Seq((1, (2, "a"), Seq(1.5, 2.5), Map("k" -> Seq(3L))))
+        .toDF("id", "st", "arr", "m")), true),
+      ("decimal", plain(Seq((1, "1.25", "123456789012.123456789"))
+        .toDF("id", "a", "b").select(col("id"), col("a").cast("decimal(9,2)").as("a"),
+          col("b").cast("decimal(38,18)").as("b"))), true),
+      ("TIMESTAMP_NTZ", plain(Seq((1, java.time.LocalDateTime.of(2024, 2, 1, 12, 30)))
+        .toDF("id", "ts")), true),
+      // a summary whose schema differs from the data files': Spark's
+      // inference reads the summary, so one data footer must not
+      ("_metadata summary", dir => {
+        Seq((1, "a")).toDF("id", "s").write.parquet(dir)
+        val other = tmp() + "/other"
+        Seq((1, "a", 2.0)).toDF("id", "s", "extra").write.parquet(other)
+        val part = new java.io.File(other).listFiles().find(_.getName.endsWith(".parquet")).get
+        java.nio.file.Files.copy(part.toPath, java.nio.file.Paths.get(dir, "_metadata"))
+      }, false),
+      ("mergeSchema=true", dir => {
+        Seq((1, "a")).toDF("id", "s").write.parquet(dir)
+        Seq((2, "b", 2.0)).toDF("id", "s", "extra").write.mode("append").parquet(dir)
+        spark.conf.set(mergeKey, "true")
+      }, false))
+    cases.foreach { case (name, write, jobFree) =>
+      val dir = tmp() + "/t"
+      try {
+        write(dir)
+        val (df, jobs) = jobsDuring(Tables.parquet(spark, dir))
+        assert(df.schema === spark.read.parquet(dir).schema, name)
+        assert((jobs === 0) === jobFree, s"$name: $jobs jobs")
+        assert(df.collect().length === spark.read.parquet(dir).collect().length, name)
+      } finally spark.conf.unset(mergeKey)
+    }
+    val empty = tmp()
+    val e = intercept[org.apache.spark.sql.AnalysisException](Tables.parquet(spark, empty))
+    assert(e.getCondition === "UNABLE_TO_INFER_SCHEMA")
   }
 
   test("scratchDir: one stable path per (name, sf dir), removed when the JVM exits") {
@@ -445,6 +496,33 @@ class TablesSpec extends SparkSpec {
     FileStatsIndex.write(FileStatsIndex.build(spark, dir2, Seq("l_shipdate")), dir2)
     val (pruned2, all2) = FileStatsIndex.plannedFiles(spark, dir2, "l_shipdate", lo, hi)
     assert(pruned2.length === all2.length)
+  }
+
+  test("FileStatsIndex: on a partitioned table, pruned and empty reads keep the full read's columns") {
+    import graft.sources.FileStatsIndex
+    val dir = tmp() + "/lake"
+    (1L to 400L).map(k => (k, (k % 4).toInt)).toDF("k", "part")
+      .repartitionByRange(8, col("k")).sortWithinPartitions("k")
+      .write.partitionBy("part").parquet(dir)
+    FileStatsIndex.write(FileStatsIndex.build(spark, dir, Seq("k")), dir)
+    FileStatsIndex.writeBloom(FileStatsIndex.buildBloom(spark, dir, "k"), dir)
+    val full = Tables.parquet(spark, dir)
+    assert(full.columns === Array("k", "part"))
+    def same(got: org.apache.spark.sql.DataFrame, want: org.apache.spark.sql.DataFrame,
+             what: String): Unit = {
+      assert(got.schema === full.schema, what)
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty, what)
+    }
+    val inRange = col("k").between(101L, 140L)
+    same(FileStatsIndex.prunedRead(spark, dir, "k", lit(101L), lit(140L)).filter(inRange),
+      full.filter(inRange), "prunedRead, files hit")
+    same(FileStatsIndex.prunedRead(spark, dir, "k", lit(1000L), lit(2000L)),
+      full.filter(lit(false)), "prunedRead, no file hit")
+    same(FileStatsIndex.prunedPointRead(spark, dir, "k", lit(42L)).filter(col("k") === 42L),
+      full.filter(col("k") === 42L), "prunedPointRead, files hit")
+    assert(FileStatsIndex.plannedFilesBloom(spark, dir, "k", lit(-7L))._1.isEmpty)
+    same(FileStatsIndex.prunedPointRead(spark, dir, "k", lit(-7L)),
+      full.filter(lit(false)), "prunedPointRead, no file hit")
   }
 
   test("FileStatsIndex bloom: point lookup opens ~1 of 8 hash-partitioned " +
