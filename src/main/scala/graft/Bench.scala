@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.immutable.ListMap
 
 /** Benchmark main (driver contract): prints ONE JSON line.
   *
@@ -64,6 +65,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   runs 10×+30×, a `probe100` round trades the 30× sweep for the
   *   100× probe. Force either with BENCH_MODE / BENCH_SCALE30 /
   *   BENCH_SCALE100.
+  *
+  * Each timed query runs under [[Capped]], which stops a query that
+  * outlives its cap (timing `-1`) before the next one starts. Both
+  * documents are ordered trees written by [[Json]]: key order is the
+  * truncation priority, and strings are escaped by the writer alone.
   *
   * Queries are materialized through the noop sink — count() lets
   * Spark's count-star shortcut skip projection work and would
@@ -218,14 +224,17 @@ object Bench {
   /** BENCH_MODE resolution: an explicit mode wins; `auto` (anything
     * else) FLIPS the previous tracked artifact's `bench_mode` so
     * consecutive driver rounds alternate full-30× and 100×-probe
-    * coverage. A missing / modeless artifact starts at full30.
+    * coverage. A missing, unreadable or modeless artifact starts at
+    * full30.
     */
   def resolveMode(envMode: Option[String], prevArtifact: => String): String =
     envMode match {
       case Some(m @ ("full30" | "probe100")) => m
       case _ =>
-        if (prevArtifact.contains("\"bench_mode\":\"full30\"")) "probe100"
-        else "full30"
+        val prev =
+          try Json.read(prevArtifact).path("bench_mode").asText("")
+          catch { case scala.util.control.NonFatal(_) => "" }
+        if (prev == "full30") "probe100" else "full30"
     }
 
   def envConfig(): Config = {
@@ -242,13 +251,8 @@ object Bench {
     // PREVIOUS tracked artifact's mode, so consecutive driver rounds
     // alternate 30×-sweep and 100×-probe coverage; a missing/modeless
     // artifact starts the cadence at full30.
-    val mode = resolveMode(sys.env.get("BENCH_MODE"), {
-      try {
-        val p = java.nio.file.Paths.get(detailPath)
-        if (java.nio.file.Files.exists(p)) java.nio.file.Files.readString(p)
-        else ""
-      } catch { case _: Exception => "" }
-    })
+    val mode = resolveMode(sys.env.get("BENCH_MODE"),
+      java.nio.file.Files.readString(java.nio.file.Paths.get(detailPath)))
     val probe = mode == "probe100"
     Config(
       sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
@@ -315,7 +319,7 @@ object Bench {
       .asScala.map(b => math.max(b.getCollectionTime, 0L)).sum
   }
 
-  private def timedRun(spark: SparkSession,
+  private[graft] def timedRun(spark: SparkSession,
                        queries: Map[String, (SparkSession, String) => DataFrame],
                        name: String, dir: String, capSec: Int): Timing = {
     val fn = queries(name)
@@ -333,40 +337,24 @@ object Bench {
     val compiles0 = compileCount
     val gc0 = totalGcMs
     val t0 = System.nanoTime()
-    val runner = new Thread(() => {
-      // job group is thread-local: set it on the thread that submits
-      sc.setJobGroup(group, name, interruptOnCancel = true)
+    val outcome = Capped.run(spark, group, capSec) {
       sc.setLocalProperty(BuildProp, group)
       val df = try fn(spark, dir) finally sc.setLocalProperty(BuildProp, null)
       df.write.format("noop").mode("overwrite").save()
-    }, group)
-    val err = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-    runner.setDaemon(true)
-    runner.setUncaughtExceptionHandler((_, e) => err.set(e))
-    runner.start()
-    runner.join(capSec * 1000L)
-    val timing = if (runner.isAlive) {
-      spark.sparkContext.cancelJobGroup(group)
-      // a streaming query ignores job-group cancellation (it blocks in
-      // awaitTermination, not in a job) — stop any active streams so a
-      // capped ev_stream_* query can't keep running and pollute the
-      // timings of everything after it
-      spark.streams.active.foreach { q =>
-        try q.stop() catch { case _: Exception => () }
-      }
-      runner.join(30000L) // drain cancellation
-      System.err.println(s"[bench] $name exceeded ${capSec}s cap, cancelled")
-      Timing(-1.0, totalGcMs - gc0)
-    } else if (err.get != null) {
-      // record the failure's first line IN the artifact: round 10's 30×
-      // sweep cascade (24 consecutive -2.0s) was undiagnosable because
-      // the messages lived only on a lost console
-      val msg = Option(err.get.getMessage).getOrElse(err.get.getClass.getName)
-        .linesIterator.nextOption().getOrElse("").take(160)
-      System.err.println(s"[bench] $name failed: ${err.get}")
-      err.get.printStackTrace()
-      Timing(-2.0, totalGcMs - gc0, Some(msg))
-    } else Timing((System.nanoTime() - t0) / 1e9, totalGcMs - gc0)
+    }
+    val timing = outcome match {
+      case Capped.Done(_) => Timing((System.nanoTime() - t0) / 1e9, totalGcMs - gc0)
+      case Capped.CapExceeded =>
+        System.err.println(s"[bench] $name exceeded ${capSec}s cap, cancelled")
+        Timing(-1.0, totalGcMs - gc0)
+      case Capped.Failed(e) =>
+        // record the failure's first line IN the artifact: round 10's 30×
+        // sweep cascade (24 consecutive -2.0s) was undiagnosable because
+        // the messages lived only on a lost console
+        System.err.println(s"[bench] $name failed: $e")
+        e.printStackTrace()
+        Timing(-2.0, totalGcMs - gc0, Some(Capped.firstLine(e)))
+    }
     // -1 marks a count the listener bus could not deliver in time
     val drained =
       try { org.apache.spark.ListenerBusDrain.drain(sc); true }
@@ -383,20 +371,9 @@ object Bench {
     org.apache.spark.metrics.source.CodegenMetrics
       .METRIC_COMPILATION_TIME.getCount
 
-  private def jsonDict(entries: Iterable[(String, Double)]): String =
-    entries.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
-
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => " "
-      case c => c.toString
-    } + "\""
-
-  private def names(xs: Seq[String]): String =
-    xs.map("\"" + _ + "\"").mkString("[", ",", "]")
+  /** A name -> seconds dict in the given order, at 3 decimals. */
+  private def secDict(entries: Iterable[(String, Double)]): ListMap[String, Any] =
+    ListMap.from(entries.map { case (k, v) => k -> Json.dec(v, 3) })
 
   /** Queries whose wall-time is fixed micro-batch + checkpoint
     * overhead, not data cost (Structured Streaming: each runs a real
@@ -482,20 +459,63 @@ object Bench {
         .map(_ -> vocabGrowth).toMap
   }
 
-  /** One derived-scale sweep's output: its JSON section, the flagged /
-    * confirmed cliff names, the per-query timings + per-input-row
-    * ratios, and the recheck records (for the top-level
-    * `cliffs_rechecked` roll-up).
+  /** A cliff flag's recheck: the isolated re-run's seconds, per-input-row
+    * ratio and verdict, or why it did not run (`skipped_*`).
     */
-  final case class SweepOut(json: String, flagged: Seq[String],
-                            confirmed: Seq[String],
-                            unadjudicated: Seq[String],
-                            timed: Map[String, Double],
-                            ratios: Map[String, Double],
-                            rechecks: Seq[String], recheckSkipped: Int)
+  final case class Recheck(skipped: Option[String], sec: Double = 0.0,
+                           ratio: Double = 0.0, confirmed: Boolean = false) {
+    def fields: ListMap[String, Any] = skipped match {
+      case Some(why) => ListMap("recheck" -> why)
+      case None => ListMap("sec_isolated" -> Json.dec(sec, 3),
+        "ratio_isolated" -> Json.dec(ratio, 2), "confirmed" -> confirmed)
+    }
+  }
 
-  private val emptySweep =
-    SweepOut("null", Nil, Nil, Nil, Map.empty, Map.empty, Nil, 0)
+  /** One flagged query of a sweep: its in-sweep run, its recheck, and
+    * for a confirmed cliff the measured output growth (scaled / base
+    * rows, base rows).
+    */
+  final case class Cliff(name: String, sec: Double, ratio: Double,
+                         timedOut: Boolean, recheck: Recheck,
+                         rowsGrowth: Option[(Double, Long)] = None) {
+    def json: ListMap[String, Any] =
+      ListMap("name" -> name, "ratio" -> Json.dec(ratio, 2),
+        "sec" -> Json.dec(sec, 3), "timed_out" -> timedOut) ++
+        recheck.fields ++ rowsGrowth.toSeq.flatMap { case (g, base) =>
+          Seq("rows_growth" -> Json.dec(g, 1), "base_rows" -> base) }
+  }
+
+  /** One derived-scale sweep: its settings, the per-query timings (in
+    * run order) and per-input-row ratios, and what it flagged, errored
+    * and skipped (each skip with its reason and best predictor). `copies`
+    * 0 is a sweep that did not run (null in the artifact).
+    */
+  final case class SweepOut(copies: Int = 0, budgetSec: Int = 0,
+                            capSec: Int = 0, warmSec: Double = 0.0,
+                            warmFailed: Seq[String] = Nil,
+                            timed: ListMap[String, Double] = ListMap.empty,
+                            gcMs: ListMap[String, Double] = ListMap.empty,
+                            ratios: Map[String, Double] = Map.empty,
+                            cliffs: Seq[Cliff] = Nil,
+                            errored: Seq[(String, String)] = Nil,
+                            cascadeStopAfter: Option[String] = None,
+                            skipped: Seq[ListMap[String, Any]] = Nil) {
+    def flagged: Seq[String] = cliffs.map(_.name)
+    def confirmed: Seq[String] = cliffs.filter(_.recheck.confirmed).map(_.name)
+    def unadjudicated: Seq[String] =
+      cliffs.filter(_.recheck.skipped.isDefined).map(_.name)
+    def rechecks: Seq[ListMap[String, Any]] = cliffs.map(c =>
+      ListMap("name" -> c.name, "copies" -> copies) ++ c.recheck.fields)
+    def json: Any =
+      if (copies == 0) null
+      else ListMap("copies" -> copies, "budget_sec" -> budgetSec,
+        "query_cap_sec" -> capSec, "warm_sec" -> Json.dec(warmSec, 1),
+        "warm_failed" -> warmFailed, "queries" -> secDict(timed),
+        "gc_ms" -> secDict(gcMs), "cliffs" -> cliffs.map(_.json),
+        "errored" -> errored.map { case (n, m) => ListMap("name" -> n, "msg" -> m) },
+        "cascade_stop_after" -> cascadeStopAfter,
+        "skipped_detail" -> skipped)
+  }
 
   /** Run the whole bench under `cfg`; returns (full artifact JSON,
     * compact summary JSON). Writes nothing, stops nothing — `main`
@@ -574,8 +594,6 @@ object Bench {
     }
     val results = picked.map { case (n, t) => n -> t.sec }
     val gcMs = picked.map { case (n, t) => n -> t.gcMs.toDouble }
-    def countsJson(f: Timing => Long): String =
-      picked.map { case (n, t) => "\"" + n + "\":" + f(t) }.mkString("{", ",", "}")
     val failed = results.collect { case (k, v) if v <= 0 => k }
     val timeAt01 = results.toMap
 
@@ -662,12 +680,19 @@ object Bench {
       // flight made the r11 sweep head (cheapest-first = the first ~15
       // queries) ratio 3–17× — a cold-start band, not 15 plan
       // regressions. One noop full scan per table settles the page
-      // cache before any measurement starts.
+      // cache before any measurement starts. It reads as the queries do
+      // (legacy-nanos event timestamps included); a table that fails to
+      // scan is named in the section's `warm_failed`.
       val warmT0 = System.nanoTime()
-      graft.sources.ScaledCorpus.keyCols.keys.foreach { table =>
-        try spark.read.parquet(s"$scaledDir/$table.parquet")
-          .write.format("noop").mode("overwrite").save()
-        catch { case _: Exception => () }
+      val warmFailed = graft.sources.ScaledCorpus.keyCols.keys.toSeq.sorted.filter { table =>
+        try {
+          graft.sources.Tables.readParquetAutoNanos(spark, s"$scaledDir/$table.parquet")
+            .write.format("noop").mode("overwrite").save()
+          false
+        } catch { case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[bench] ${copies}x warm scan of $table failed: $e")
+          true
+        }
       }
       val warmSec = (System.nanoTime() - warmT0) / 1e9
       // cheapest-first by the best predictor available: a PRIOR sweep's
@@ -712,19 +737,10 @@ object Bench {
       // power. The recheck spend stays bounded by its own budget so a
       // burst of CONFIRMED cliffs (each worth up to `cap`) can't eat
       // the deadline.
-      val recheckRecords = scala.collection.mutable.ArrayBuffer.empty[String]
       var recheckSpent = 0.0
-      var recheckSkipped = 0
       final case class Flag(name: String, sec: Double, ratio: Double,
                             timedOut: Boolean)
       val flagsBuf = scala.collection.mutable.ArrayBuffer.empty[Flag]
-      // cliff bookkeeping: name -> (firstSec, firstRatio, timedOut,
-      // recheckJsonFragment, confirmed, unadjudicated)
-      final case class Cliff(name: String, sec: Double, ratio: Double,
-                             timedOut: Boolean, recheck: String,
-                             confirmed: Boolean,
-                             unadjudicated: Boolean = false)
-      val cliffs = scala.collection.mutable.ArrayBuffer.empty[Cliff]
       // Consecutive-error circuit breaker: a sick JVM (one r10-era run
       // failed 24 queries in a row, instantly, after 700 successful
       // runs — cause environmental, unreproducible) fails everything
@@ -780,10 +796,9 @@ object Bench {
         }
       }
       // ── recheck phase: worst flag first ──
-      flagsBuf.sortBy(-_.ratio).foreach { f =>
+      val cliffs = flagsBuf.toSeq.sortBy(-_.ratio).map { f =>
         val t1 = timeAt01.getOrElse(f.name, 0.0)
         if (deadlineLeft < cap + 30 || recheckSpent > cfg.recheckBudget) {
-          recheckSkipped += 1
           val why = if (deadlineLeft < cap + 30) "skipped_deadline"
                     else "skipped_budget"
           // MEASUREMENT FIX (r16): a skipped recheck used to mark the
@@ -796,11 +811,7 @@ object Bench {
           // A flag the bench could not adjudicate is now reported in
           // its own `cliffs_unadjudicated` bucket: never silently
           // dropped, never falsely confirmed.
-          cliffs += Cliff(f.name, f.sec, f.ratio, f.timedOut,
-            s""","recheck":"$why"""", confirmed = false,
-            unadjudicated = true)
-          recheckRecords +=
-            s"""{"name":"${f.name}","copies":$copies,"recheck":"$why"}"""
+          Cliff(f.name, f.sec, f.ratio, f.timedOut, Recheck(Some(why)))
         } else {
           // isolated re-run: confirmed means it still ratios >2 (or
           // still times out); refuted means the in-sweep run was
@@ -812,18 +823,13 @@ object Bench {
             if (r.sec == -2.0) -1.0 else effIso / (copies * t1)
           val confirmed = r.sec == -1.0 ||
             (r.sec > 0 && ratioIso > 2.0 && effIso > 2.0)
-          val frag = f""","sec_isolated":${r.sec}%.3f,""" +
-            f""""ratio_isolated":$ratioIso%.2f,"confirmed":$confirmed"""
-          cliffs += Cliff(f.name, f.sec, f.ratio, f.timedOut, frag,
-            confirmed)
-          recheckRecords += f"""{"name":"${f.name}","copies":$copies,""" +
-            f""""sec_isolated":${r.sec}%.3f,"ratio_isolated":""" +
-            f"""$ratioIso%.2f,"confirmed":$confirmed}"""
           // the isolated run is the steadier measurement — record the
           // better of the two as the sweep timing (the flag entry
           // keeps the first run's number)
           if (r.sec > 0 && (f.sec < 0 || r.sec < f.sec))
             timed(f.name) = r.sec
+          Cliff(f.name, f.sec, f.ratio, f.timedOut,
+            Recheck(None, r.sec, ratioIso, confirmed))
         }
       }
       if (skipped.nonEmpty)
@@ -835,14 +841,14 @@ object Bench {
       // a scale number or an explicit predictor + reason behind its
       // skip. preSkips (sublinear_at_10x) carry their measured 10×
       // ratio — proof-of-sub-linearity from THIS run, not absence.
-      val skDetail = (skipped.map { case (n, why) =>
-        val p = prior.get(n)
+      val skDetail = skipped.toSeq.map { case (n, why) =>
+        ListMap("name" -> n, "reason" -> why) ++ prior.get(n)
           .orElse(timeAt01.get(n).filter(_ > 0).map(_ * copies))
-          .map(v => f""","prior_sec":$v%.3f""").getOrElse("")
-        s"""{"name":"$n","reason":"$why"$p}"""
+          .map(v => "prior_sec" -> Json.dec(v, 3))
       } ++ preSkips.toSeq.sortBy(_._1).map { case (n, r10) =>
-        f"""{"name":"$n","reason":"sublinear_at_10x","ratio_10x":$r10%.2f}"""
-      }).mkString("[", ",", "]")
+        ListMap("name" -> n, "reason" -> "sublinear_at_10x",
+          "ratio_10x" -> Json.dec(r10, 2))
+      }
       // Per-INPUT-row ratio assumes work ∝ input. For pair-generating
       // queries (blocked self-joins) output grows ~quadratically in
       // block size, so a CONFIRMED ratio can still be sub-linear in
@@ -854,42 +860,34 @@ object Bench {
       def outRows(name: String, dir: String): Long =
         try queries(name)(spark, dir).count()
         catch { case scala.util.control.NonFatal(_) => -1L }
-      val cliffJson = cliffs.sortBy(-_.ratio).map { c =>
-        val rg =
-          if (c.confirmed && !c.timedOut && deadlineLeft > 60) {
-            val base = outRows(c.name, cfg.sfDir)
-            val scaled = outRows(c.name, scaledDir)
-            if (base > 0 && scaled >= 0)
-              f""","rows_growth":${scaled.toDouble / base}%.1f,"base_rows":$base%d"""
-            else ""
-          } else ""
-        f"""{"name":"${c.name}","ratio":${c.ratio}%.2f,""" +
-          f""""sec":${c.sec}%.3f,"timed_out":${c.timedOut}${c.recheck}$rg}"""
-      }.mkString("[", ",", "]")
+      val cliffsOut = cliffs.map { c =>
+        if (c.recheck.confirmed && !c.timedOut && deadlineLeft > 60) {
+          val base = outRows(c.name, cfg.sfDir)
+          val scaled = outRows(c.name, scaledDir)
+          if (base > 0 && scaled >= 0)
+            c.copy(rowsGrowth = Some((scaled.toDouble / base, base)))
+          else c
+        } else c
+      }
       // errored queries (-2.0) are excluded from cliff ratios (no
       // timing to ratio) — name them explicitly, each with its first
       // message line, so a scale-induced failure is never readable as
       // "not flagged" and a cascade's shared root cause is in-artifact
-      val er = timed.collect { case (n, v) if v == -2.0 =>
-        s"""{"name":"$n","msg":${jsonStr(errMsgs.getOrElse(n, ""))}}"""
-      }.mkString("[", ",", "]")
-      val casc = cascadeAfter.map(jsonStr).getOrElse("null")
+      val er = timed.toSeq.collect { case (n, v) if v == -2.0 =>
+        n -> errMsgs.getOrElse(n, "")
+      }
       val ratios = timed.collect {
         case (n, v) if v > 0 && timeAt01.getOrElse(n, 0.0) > 0.05 =>
           n -> v / (copies * timeAt01(n))
       }.toMap
-      val json =
-        f"""{"copies":$copies,"budget_sec":$budget,"query_cap_sec":$cap,"warm_sec":$warmSec%.1f,"queries":${jsonDict(timed)},"gc_ms":${jsonDict(sweepGc)},"cliffs":$cliffJson,"errored":$er,"cascade_stop_after":$casc,"skipped_detail":$skDetail}"""
-      SweepOut(json, cliffs.map(_.name).toSeq,
-        cliffs.filter(_.confirmed).map(_.name).toSeq,
-        cliffs.filter(_.unadjudicated).map(_.name).toSeq, timed.toMap,
-        ratios, recheckRecords.toSeq, recheckSkipped)
+      SweepOut(copies, budget, cap, warmSec, warmFailed, ListMap.from(timed),
+        ListMap.from(sweepGc), ratios, cliffsOut, er, cascadeAfter, skDetail)
     }
 
     val s10 =
       if (cfg.scaleOn && cfg.scaleCopies > 1)
         sweep(cfg.scaleCopies, cfg.scaleBudget, cfg.scaleCap)
-      else emptySweep
+      else SweepOut()
 
     // ── scale-correctness oracle at 10× ──────────────────────────────
     // The sweeps above TIME the scaled runs; this phase VERIFIES their
@@ -898,7 +896,7 @@ object Bench {
     // It runs right after the 10× sweep so the driver artifact carries
     // oracle-gated 10× evidence even when the 30× tail later truncates
     // under the global deadline; its own skips are reported per-query.
-    val (oracleJson, oracleResults) =
+    val (oracleSection, oracleResults): (Any, Seq[ScaleOracle.Result]) =
       if (cfg.scaleOracleOn && cfg.scaleOn && cfg.scaleCopies > 1 &&
           deadlineLeft > 60) {
         val scaledDir = new java.io.File(
@@ -926,15 +924,12 @@ object Bench {
           cfg.scaleCopies, cfg.scaleOracleBudget, () => deadlineLeft,
           perCheckCapSec = cfg.scaleOracleCheckCap,
           timedOutFlags = timedOutFlags)
-        val oj = ScaleOracle.toJson(cfg.scaleCopies, rs,
-          (System.nanoTime() - t0) / 1e9)
-        val failedNames = rs.filter(r =>
-          r.status == "fail" || r.status == "error").map(_.name)
-        if (failedNames.nonEmpty)
-          System.err.println(s"[bench] scale oracle FAILED: " +
-            failedNames.mkString(","))
-        (oj, rs)
-      } else ("null", Seq.empty[ScaleOracle.Result])
+        (ScaleOracle.section(cfg.scaleCopies, rs, (System.nanoTime() - t0) / 1e9), rs)
+      } else (null, Nil)
+    val oracleFailed = oracleResults
+      .filter(r => r.status == "fail" || r.status == "error").map(_.name)
+    if (oracleFailed.nonEmpty)
+      System.err.println(s"[bench] scale oracle FAILED: ${oracleFailed.mkString(",")}")
     // 30× sweep: ordered by the 10× measurements (×3 — the known-
     // expensive tail runs last, budget buys max coverage), and
     // SKIPPING what 10× already answered: a query that was timed
@@ -951,7 +946,7 @@ object Bench {
       if (cfg.scale30On && cfg.scale30Copies > 1)
         sweep(cfg.scale30Copies, cfg.scale30Budget, cfg.scale30Cap,
           prior30, sublinear30)
-      else emptySweep
+      else SweepOut()
     // opt-in 100× probe over the flagship + dedup/ANN defaults — the
     // "plans you'd want at 100×" datapoint (run locally: the corpus
     // build + sweep don't fit the driver's deadline alongside 10×+30×)
@@ -964,7 +959,7 @@ object Bench {
           prior100 ++ prior30.view.filterKeys(k => !prior100.contains(k)),
           Map.empty, cfg.scale100Names.toSet,
           priorityFirst = scale100Priority)
-      else emptySweep
+      else SweepOut()
 
     // headline dict + total ride the dedicated-pass MEDIANS (the
     // registry `queries` dict keeps min-of-N for every query)
@@ -974,54 +969,69 @@ object Bench {
     val excludedTwins = results.collect {
       case (n, _) if n.endsWith("_coarse") => n
     }
-    val failedDetail = picked.collect { case (n, t) if t.sec == -2.0 =>
-      s"""{"name":"$n","msg":${jsonStr(t.errMsg.getOrElse(""))}}"""
-    }.mkString("[", ",", "]")
-    val rechecksAll =
-      (s10.rechecks ++ s30.rechecks ++ s100.rechecks).mkString("[", ",", "]")
-    val recheckSkippedN =
-      s10.recheckSkipped + s30.recheckSkipped + s100.recheckSkipped
-    val hRepeats = headlineRepeats.map { case (n, ts) =>
-      s""""$n":[${ts.map(t => f"$t%.3f").mkString(",")}]"""
-    }.mkString("{", ",", "}")
-    def sweepCount(s: SweepOut) = s.timed.size
-    def sweepSkips(s: SweepOut, on: Boolean, total: Int) =
-      if (!on) 0 else total - s.timed.size
-    val n10 = sweepCount(s10)
-    val n30 = sweepCount(s30)
-    val oraclePass = oracleResults.count(_.status == "pass")
-    val oracleFail = oracleResults.count(r =>
-      r.status == "fail" || r.status == "error")
-    val counts =
-      s"""{"registry":${selected.size},"timed_1x":${results.count(_._2 > 0)},""" +
-        s""""failed_1x":${failed.size},"timed_10x":$n10,"timed_30x":$n30,""" +
-        s""""sublinear_skips_30x":${sublinear30.size},""" +
-        s""""timed_100x":${sweepCount(s100)},""" +
-        s""""oracle_pass":$oraclePass,"oracle_fail":$oracleFail,""" +
-        s""""recheck_skipped":$recheckSkippedN}"""
+    val sweeps = Seq(s10, s30, s100)
+    val counts = ListMap("registry" -> selected.size,
+      "timed_1x" -> results.count(_._2 > 0), "failed_1x" -> failed.size,
+      "timed_10x" -> s10.timed.size, "timed_30x" -> s30.timed.size,
+      "sublinear_skips_30x" -> sublinear30.size,
+      "timed_100x" -> s100.timed.size,
+      "oracle_pass" -> oracleResults.count(_.status == "pass"),
+      "oracle_fail" -> oracleFailed.size,
+      "recheck_skipped" -> sweeps.map(_.unadjudicated.size).sum)
+    // the scalars both documents end with
+    val tail = ListMap("headline_stddev" -> Json.dec(headlineStddev, 3),
+      "elapsed_sec" -> Json.dec(globalElapsed, 1),
+      "deadline_sec" -> Json.dec(cfg.deadlineSec, 0))
+    val driverKeys = ListMap("sf" -> cfg.sfDir, "metric" -> "total",
+      "unit" -> "sec", "value" -> Json.dec(headlineTotal, 3))
 
     // FULL artifact: key order = truncation priority (big dicts first,
     // summary scalars last, so any tail of the line is self-contained)
-    val full =
-      f"""{"queries":${jsonDict(results)},"gc_ms":${jsonDict(gcMs)},"codegen_compiles":${countsJson(_.compiles)},"build_jobs":${countsJson(_.buildJobs)},"headline_repeats":$hRepeats,"scale":${s10.json},"scale30":${s30.json},"scale100":${s100.json},"scale_oracle":$oracleJson,"headline_queries":${jsonDict(headlineResults)},"headline_fallback":${names(headlineFallback)},"bench_mode":"${cfg.mode}","cliffs_10x":${names(s10.flagged)},"cliffs_30x":${names(s30.flagged)},"cliffs_100x":${names(s100.flagged)},"cliffs_confirmed_10x":${names(s10.confirmed)},"cliffs_confirmed_30x":${names(s30.confirmed)},"cliffs_confirmed_100x":${names(s100.confirmed)},"cliffs_unadjudicated_10x":${names(s10.unadjudicated)},"cliffs_unadjudicated_30x":${names(s30.unadjudicated)},"cliffs_unadjudicated_100x":${names(s100.unadjudicated)},"cliffs_rechecked":$rechecksAll,"excluded_twins":${names(excludedTwins)},"excluded_sweep":${names(excludedSweep)},"null_models":${
-        nullModels.view.filterKeys(selected.contains).toSeq.sortBy(_._1)
-          .map { case (n, v) => s""""$n":${jsonStr(v)}""" }
-          .mkString("{", ",", "}")},"counts":$counts,"headline_stddev":$headlineStddev%.3f,"elapsed_sec":$globalElapsed%.1f,"deadline_sec":${cfg.deadlineSec}%.0f,"failed_detail":$failedDetail,"failed":${names(failed)},"total_all":$totalAll%.3f,"sf":"${cfg.sfDir}","metric":"total","unit":"sec","value":$headlineTotal%.3f}"""
+    val full = ListMap(
+      "queries" -> secDict(results), "gc_ms" -> secDict(gcMs),
+      "codegen_compiles" -> ListMap.from(picked.map { case (n, t) => n -> t.compiles }),
+      "build_jobs" -> ListMap.from(picked.map { case (n, t) => n -> t.buildJobs }),
+      "headline_repeats" -> ListMap.from(headlineRepeats.map { case (n, ts) =>
+        n -> ts.map(Json.dec(_, 3)) }),
+      "scale" -> s10.json, "scale30" -> s30.json, "scale100" -> s100.json,
+      "scale_oracle" -> oracleSection,
+      "headline_queries" -> secDict(headlineResults),
+      "headline_fallback" -> headlineFallback, "bench_mode" -> cfg.mode,
+      "cliffs_10x" -> s10.flagged, "cliffs_30x" -> s30.flagged,
+      "cliffs_100x" -> s100.flagged,
+      "cliffs_confirmed_10x" -> s10.confirmed,
+      "cliffs_confirmed_30x" -> s30.confirmed,
+      "cliffs_confirmed_100x" -> s100.confirmed,
+      "cliffs_unadjudicated_10x" -> s10.unadjudicated,
+      "cliffs_unadjudicated_30x" -> s30.unadjudicated,
+      "cliffs_unadjudicated_100x" -> s100.unadjudicated,
+      "cliffs_rechecked" -> sweeps.flatMap(_.rechecks),
+      "excluded_twins" -> excludedTwins, "excluded_sweep" -> excludedSweep,
+      "null_models" -> ListMap.from(
+        nullModels.view.filterKeys(selected.contains).toSeq.sortBy(_._1)),
+      "counts" -> counts) ++ tail ++ ListMap(
+      "failed_detail" -> picked.collect { case (n, t) if t.sec == -2.0 =>
+        ListMap("name" -> n, "msg" -> t.errMsg.getOrElse("")) },
+      "failed" -> failed, "total_all" -> Json.dec(totalAll, 3)) ++ driverKeys
 
     // SUMMARY line (printed): everything a bounded-tail consumer needs
     // — headline per-query dict, cliff verdicts, coverage counts —
     // in ≤ ~1.5 KB. `queries` here is the HEADLINE set (the full
     // registry dict lives in `detail`); name lists are capped at 12
     // (counts carry the totals).
-    def cap12(xs: Seq[String]) = names(xs.take(12))
-    val confirmedAll = (s10.confirmed ++ s30.confirmed ++ s100.confirmed).distinct
-    val unadjudicatedAll =
-      (s10.unadjudicated ++ s30.unadjudicated ++ s100.unadjudicated).distinct
-    val summaryQueries =
-      if (headlineResults.nonEmpty) headlineResults else results.take(12)
-    val summary =
-      f"""{"schema":"graft-bench-summary-v1","detail":"${cfg.detailPath}","bench_mode":"${cfg.mode}","counts":$counts,"oracle_failed":${cap12(oracleResults.filter(r => r.status == "fail" || r.status == "error").map(_.name))},"cliffs_10x":${cap12(s10.flagged)},"cliffs_30x":${cap12(s30.flagged)},"cliffs_100x":${cap12(s100.flagged)},"cliffs_confirmed":${cap12(confirmedAll)},"cliffs_unadjudicated":${cap12(unadjudicatedAll)},"failed":${cap12(failed)},"headline_stddev":$headlineStddev%.3f,"elapsed_sec":$globalElapsed%.1f,"deadline_sec":${cfg.deadlineSec}%.0f,"total_all":$totalAll%.3f,"queries":${jsonDict(summaryQueries)},"sf":"${cfg.sfDir}","metric":"total","unit":"sec","value":$headlineTotal%.3f}"""
-    (full, summary)
+    val summary = ListMap("schema" -> "graft-bench-summary-v1",
+      "detail" -> cfg.detailPath, "bench_mode" -> cfg.mode,
+      "counts" -> counts, "oracle_failed" -> oracleFailed.take(12),
+      "cliffs_10x" -> s10.flagged.take(12), "cliffs_30x" -> s30.flagged.take(12),
+      "cliffs_100x" -> s100.flagged.take(12),
+      "cliffs_confirmed" -> sweeps.flatMap(_.confirmed).distinct.take(12),
+      "cliffs_unadjudicated" -> sweeps.flatMap(_.unadjudicated).distinct.take(12),
+      "failed" -> failed.take(12)) ++ tail ++ ListMap(
+      "total_all" -> Json.dec(totalAll, 3),
+      "queries" -> secDict(
+        if (headlineResults.nonEmpty) headlineResults else results.take(12))) ++
+      driverKeys
+    (Json.write(full), Json.write(summary))
   }
 
   def main(args: Array[String]): Unit = {

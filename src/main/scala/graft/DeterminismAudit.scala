@@ -74,7 +74,7 @@ object DeterminismAudit {
         try {
           val rows = fn(spark, sfDir).collect().map(render).sorted
           md5(rows) + s" rows=${rows.length}"
-        } catch { case e: Throwable => s"ERROR: ${e.getMessage}" }
+        } catch { case scala.util.control.NonFatal(e) => s"ERROR: ${e.getMessage}" }
       }
       dump.foreach(w => w.println(s"$name\t${prints.head}"))
       // a query that THROWS under both shapes fingerprints identically

@@ -163,7 +163,7 @@ object Micro {
         SparkEntry.queries(n)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
         println(f"$n: total=${(System.nanoTime() - t0) / 1e9}%.2fs")
-        Thread.sleep(1500) // let async stage events drain
+        org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
         import scala.jdk.CollectionConverters._
         stages.asScala.toSeq.sortBy(_._1).foreach(s => println(s._2))
       }

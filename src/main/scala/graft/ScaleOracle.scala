@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import scala.collection.immutable.ListMap
+import scala.util.control.NonFatal
 
 /** Scale-correctness oracle: EXACT result predictions at derived
   * scales, so the bench's 10× run is oracle-gated, not just timed.
@@ -1071,8 +1073,6 @@ object ScaleOracle {
   final case class Result(name: String, status: String, detail: String,
                           sec: Double)
 
-  private def fmt(v: Double): String = f"$v%.3f"
-
   /** Multiset equality via two anti-differences over persisted
     * inputs; returns None on equal, Some(message) otherwise.
     */
@@ -1245,10 +1245,7 @@ object ScaleOracle {
             case Excluded(_) => done("excluded", "") // unreachable
           }
         } catch {
-          case e: Throwable =>
-            val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-              .linesIterator.nextOption().getOrElse("").take(160)
-            done("error", msg)
+          case NonFatal(e) => done("error", Capped.firstLine(e))
         }
     }
   }
@@ -1290,9 +1287,8 @@ object ScaleOracle {
     }
   }
 
-  /** verify() under a wall-clock cap: a check that exceeds the cap
-    * is cancelled (its job group, its thread interrupted) and
-    * reported as an explicit capped skip instead of
+  /** verify() under a wall-clock cap ([[Capped]]): a check that exceeds
+    * the cap is stopped and reported as an explicit capped skip instead of
     * running unbounded (ADVICE r13 — auto-tier flagged checks are by
     * definition expensive at scale). Int.MaxValue = uncapped (the
     * spec / standalone-main path).
@@ -1303,37 +1299,13 @@ object ScaleOracle {
                    copies: Int, capSec: Int): Result = {
     if (capSec == Int.MaxValue)
       return verify(spark, queries, name, sfDir, scaledDir, copies)
-    val group = s"scale-oracle-$name"
-    val out = new java.util.concurrent.atomic.AtomicReference[Result]()
-    val runner = new Thread(() => {
-      spark.sparkContext.setJobGroup(group, name, interruptOnCancel = true)
-      out.set(verify(spark, queries, name, sfDir, scaledDir, copies))
-    }, group)
-    runner.setDaemon(true)
-    runner.setUncaughtExceptionHandler((_, e) =>
-      out.set(Result(name, "error",
-        Option(e.getMessage).getOrElse(e.getClass.getName)
-          .linesIterator.nextOption().getOrElse("").take(160), capSec)))
-    runner.start()
-    runner.join(math.max(1L, capSec * 1000L)) // join(0) would wait forever
-    if (runner.isAlive) {
-      spark.streams.active.foreach { q =>
-        try q.stop() catch { case _: Exception => () }
-      }
-      // A group cancel reaches only the jobs running at that instant;
-      // the check submits its next job right after. Interrupt the check
-      // as well and cancel again until it has ended, so none of its
-      // jobs outlive the cap.
-      val drainBy = System.nanoTime + 30L * 1000000000L
-      while (runner.isAlive && System.nanoTime < drainBy) {
-        spark.sparkContext.cancelJobGroup(group)
-        runner.interrupt()
-        runner.join(500L)
-      }
-      spark.sparkContext.cancelJobGroup(group)
-      Result(name, "skip", s"cap_exceeded_${capSec}s", capSec)
-    } else Option(out.get).getOrElse(
-      Result(name, "error", "check thread died without a result", capSec))
+    Capped.run(spark, s"scale-oracle-$name", capSec)(
+        verify(spark, queries, name, sfDir, scaledDir, copies)) match {
+      case Capped.Done(r) => r
+      case Capped.Failed(e) => Result(name, "error", Capped.firstLine(e), capSec)
+      case Capped.CapExceeded =>
+        Result(name, "skip", s"cap_exceeded_${capSec}s", capSec)
+    }
   }
 
   /** Standalone runner (the in-bench phase is the driver path; this
@@ -1359,33 +1331,22 @@ object ScaleOracle {
     val rs = run(spark, SparkEntry.queries, names, sfDir,
       scaledDir, copies, budgetSec = 1e9, deadlineLeft = () => 1e9)
     rs.foreach(r => println(f"${r.status}%-8s ${r.name}%-24s ${r.sec}%7.1fs  ${r.detail}"))
-    println(toJson(copies, rs, (System.nanoTime() - t0) / 1e9))
+    println(Json.write(section(copies, rs, (System.nanoTime() - t0) / 1e9)))
     spark.stop()
     if (rs.exists(r => r.status == "fail" || r.status == "error"))
       sys.exit(1)
   }
 
-  /** JSON section for the bench artifact. */
-  def toJson(copies: Int, results: Seq[Result], elapsedSec: Double): String = {
-    def esc(s: String) = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => " "
-      // \uXXXX-escape non-ASCII: the standalone main prints via
-      // println in the platform default charset, which mangled
-      // em-dashes to '?' in captured artifacts (ADVICE r12) — escaped
-      // ASCII is charset-proof on any capture path
-      case c if c > '~' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-    val per = results.map { r =>
-      s"""{"name":"${r.name}","status":"${r.status}",""" +
-        s""""detail":"${esc(r.detail)}","sec":${fmt(r.sec)}}"""
-    }.mkString("[", ",", "]")
+  /** The bench artifact's `scale_oracle` section. */
+  def section(copies: Int, results: Seq[Result],
+              elapsedSec: Double): ListMap[String, Any] = {
     val n = (s: String) => results.count(_.status == s)
-    s"""{"copies":$copies,"checked":${results.size},"passed":${n("pass")},""" +
-      s""""failed":${n("fail")},"errored":${n("error")},"skipped":${n("skip")},""" +
-      s""""excluded":${n("excluded")},"elapsed_sec":${fmt(elapsedSec)},""" +
-      s""""results":$per}"""
+    ListMap("copies" -> copies, "checked" -> results.size,
+      "passed" -> n("pass"), "failed" -> n("fail"), "errored" -> n("error"),
+      "skipped" -> n("skip"), "excluded" -> n("excluded"),
+      "elapsed_sec" -> Json.dec(elapsedSec, 3),
+      "results" -> results.map(r => ListMap("name" -> r.name,
+        "status" -> r.status, "detail" -> r.detail,
+        "sec" -> Json.dec(r.sec, 3))))
   }
 }

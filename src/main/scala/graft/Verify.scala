@@ -3,6 +3,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import java.nio.file.{Files, Paths}
+import scala.collection.immutable.ListMap
 import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -36,6 +37,18 @@ object Verify {
     }.toIndexedSeq: _*)
   }
 
+  /** Writes `oracle_sql.json` (every registered oracle) and
+    * `failures.json` (name and message per failed query, `[]` when none)
+    * into `outDir`.
+    */
+  private[graft] def writeReport(outDir: String,
+                                 failures: Seq[(String, String)]): Unit = {
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      Json.write(SparkEntry.oracleSql))
+    Files.writeString(Paths.get(s"$outDir/failures.json"), Json.write(
+      failures.map { case (k, m) => ListMap("name" -> k, "message" -> m) }))
+  }
+
   def main(args: Array[String]): Unit = {
     // args: sfDir outDir [queryName...] — trailing names restrict the
     // dump to a subset (debugging aid; the driver passes two args)
@@ -58,25 +71,7 @@ object Verify {
         Some(name -> s"${e.getClass.getName}: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // every failed query, by name, beside the results: `[]` when none
-    Files.writeString(Paths.get(s"$outDir/failures.json"), failures
-      .map { case (k, m) => s"{${q("name")}: ${q(k)}, ${q("message")}: ${q(m)}}" }
-      .mkString("[", ",\n", "]"))
+    writeReport(outDir, failures)
     // the driver-side cost of the run's generated classes
     val compiles =
       org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount

@@ -55,6 +55,25 @@ object LlmQueries {
     s"""$nearDupCorpusSql,
        |$bandsFromCorpusCtes""".stripMargin
 
+  /** The LSH candidate pairs `(id_1, id_2)` over the `bands` CTE: a
+    * top-level SELECT, or given a `cte` name, a CTE of that name
+    * followed by its undirected edge list `edges(src, dst)`.
+    */
+  private def bandPairsSql(cte: String = ""): String = {
+    val indent = if (cte.isEmpty) "" else "  "
+    val select = Seq("SELECT DISTINCT a.doc_id AS id_1, b.doc_id AS id_2",
+      "FROM bands a JOIN bands b",
+      "  ON a.band_id = b.band_id AND a.band_hash = b.band_hash",
+      " AND a.doc_id < b.doc_id").map(indent + _).mkString("\n")
+    if (cte.isEmpty) select
+    else s"""$cte AS (
+            |$select),
+            |edges AS (
+            |  SELECT id_1 AS src, id_2 AS dst FROM $cte
+            |  UNION
+            |  SELECT id_2, id_1 FROM $cte)""".stripMargin
+  }
+
   /** Band derivation alone (expects a `corpus(doc_id, text, lang)`
     * CTE already in scope) — split out so callers can swap the
     * corpus (e.g. the exact-dedup-first graph census).
@@ -1573,10 +1592,7 @@ object LlmQueries {
           TextDedup.lshBands(sigs, "doc_id"), "doc_id")
       },
       s"""WITH $minhashBandsCtes
-         |SELECT DISTINCT a.doc_id AS id_1, b.doc_id AS id_2
-         |FROM bands a JOIN bands b
-         |  ON a.band_id = b.band_id AND a.band_hash = b.band_hash
-         | AND a.doc_id < b.doc_id""".stripMargin),
+         |${bandPairsSql()}""".stripMargin),
 
     // ───── the PRODUCTION-KEY twin of dd_minhash_pairs: the band
     // table shuffles an 8-byte xxhash64 LONG bucket key instead of a
@@ -1601,10 +1617,7 @@ object LlmQueries {
           TextDedup.lshBandsXx64(sigs, "doc_id"), "doc_id")
       },
       s"""WITH $minhashBandsCtes
-         |SELECT DISTINCT a.doc_id AS id_1, b.doc_id AS id_2
-         |FROM bands a JOIN bands b
-         |  ON a.band_id = b.band_id AND a.band_hash = b.band_hash
-         | AND a.doc_id < b.doc_id""".stripMargin),
+         |${bandPairsSql()}""".stripMargin),
 
     // ───── pairs → clusters: connected components over the LSH pair
     // list (min-label propagation to fixpoint). The oracle proves the
@@ -1620,15 +1633,7 @@ object LlmQueries {
             TextDedup.lshBands(sigs, "doc_id"), "doc_id"))
       },
       s"""WITH RECURSIVE $minhashBandsCtes,
-         |pairs AS (
-         |  SELECT DISTINCT a.doc_id AS id_1, b.doc_id AS id_2
-         |  FROM bands a JOIN bands b
-         |    ON a.band_id = b.band_id AND a.band_hash = b.band_hash
-         |   AND a.doc_id < b.doc_id),
-         |edges AS (
-         |  SELECT id_1 AS src, id_2 AS dst FROM pairs
-         |  UNION
-         |  SELECT id_2, id_1 FROM pairs),
+         |${bandPairsSql("pairs")},
          |reach(id, r) AS (
          |  SELECT src, src FROM edges
          |  UNION
@@ -1656,15 +1661,7 @@ object LlmQueries {
           .select("doc_id", "lang")
       },
       s"""WITH RECURSIVE $minhashBandsCtes,
-         |pairs AS (
-         |  SELECT DISTINCT a.doc_id AS id_1, b.doc_id AS id_2
-         |  FROM bands a JOIN bands b
-         |    ON a.band_id = b.band_id AND a.band_hash = b.band_hash
-         |   AND a.doc_id < b.doc_id),
-         |edges AS (
-         |  SELECT id_1 AS src, id_2 AS dst FROM pairs
-         |  UNION
-         |  SELECT id_2, id_1 FROM pairs),
+         |${bandPairsSql("pairs")},
          |reach(id, r) AS (
          |  SELECT src, src FROM edges
          |  UNION
@@ -1695,15 +1692,7 @@ object LlmQueries {
           .select(col("node").as("doc_id"), col("rank"))
       },
       s"""WITH $minhashBandsCtes,
-         |prs AS (
-         |  SELECT DISTINCT a.doc_id AS id_1, b.doc_id AS id_2
-         |  FROM bands a JOIN bands b
-         |    ON a.band_id = b.band_id AND a.band_hash = b.band_hash
-         |   AND a.doc_id < b.doc_id),
-         |edges AS (
-         |  SELECT id_1 AS src, id_2 AS dst FROM prs
-         |  UNION
-         |  SELECT id_2, id_1 FROM prs),
+         |${bandPairsSql("prs")},
          |deg AS (SELECT src, COUNT(*) AS deg FROM edges GROUP BY 1),
          |edeg AS (SELECT e.src, e.dst, d.deg FROM edges e JOIN deg d USING (src)),
          |nn AS (SELECT COUNT(DISTINCT src) AS n FROM edges),
@@ -1779,15 +1768,7 @@ object LlmQueries {
          |  QUALIFY row_number() OVER (PARTITION BY md5(${normSql("text")})
          |                             ORDER BY doc_id) = 1),
          |$bandsFromCorpusCtes,
-         |prs AS (
-         |  SELECT DISTINCT a.doc_id AS id_1, b.doc_id AS id_2
-         |  FROM bands a JOIN bands b
-         |    ON a.band_id = b.band_id AND a.band_hash = b.band_hash
-         |   AND a.doc_id < b.doc_id),
-         |edges AS (
-         |  SELECT id_1 AS src, id_2 AS dst FROM prs
-         |  UNION
-         |  SELECT id_2, id_1 FROM prs),
+         |${bandPairsSql("prs")},
          |deg AS (SELECT src AS node, COUNT(*) AS deg FROM edges GROUP BY 1),
          |oriented AS (
          |  SELECT e.src AS lo, e.dst AS hi

@@ -328,4 +328,75 @@ class BenchSpec extends SparkSpec {
       e.get("name").asText() == "synthetic_cliff" && e.has("recheck")),
       s"skipped recheck must appear in the roll-up: $rc")
   }
+
+  test("a capped query is stopped at its cap: timing -1, and neither its " +
+    "thread nor its jobs outlive the return") {
+    val name = "two_jobs_slow"
+    val group = s"bench-$name"
+    // one job, a 30 s sleep, then another job: at the cap the query is
+    // between jobs, where a group cancel alone reaches nothing
+    val slow: (org.apache.spark.sql.SparkSession, String) =>
+        org.apache.spark.sql.DataFrame = (s, _) => {
+      s.range(10).count()
+      Thread.sleep(30000L)
+      s.range(10).count()
+      s.range(1).toDF()
+    }
+    val jobStarts = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          jobStarts.add(e.time)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val t0 = System.nanoTime()
+      val t = Bench.timedRun(spark, Map(name -> slow), name, sfDir, capSec = 2)
+      val returnedMs = System.currentTimeMillis()
+      val tookSec = (System.nanoTime() - t0) / 1e9
+      assert(t.sec == -1.0, t.toString)
+      assert(tookSec < 10.0, s"a 2 s cap returned after $tookSec s")
+      assert(!Thread.getAllStackTraces.keySet.toArray.exists(
+        _.asInstanceOf[Thread].getName == group), s"$group still alive")
+      Thread.sleep(2000L)
+      org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
+      import scala.jdk.CollectionConverters._
+      val starts = jobStarts.asScala.toSeq
+      assert(starts.nonEmpty, "the first job carries the group")
+      assert(starts.forall(_ <= returnedMs),
+        s"a $group job started after the capped run returned: $starts vs $returnedMs")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("strings survive the JSON round trip: a failure message and a " +
+    "quoted sf dir") {
+    // a recorded failure keeps its first line, character for character
+    val msg = "bad \"x\" under C:\\tmp\tcol \u2014 stop"
+    val boom: (org.apache.spark.sql.SparkSession, String) =>
+        org.apache.spark.sql.DataFrame =
+      (_, _) => throw new IllegalStateException(msg + "\nsecond line")
+    val sf = java.nio.file.Files.createTempDirectory("graft_bench\"sf_").toString
+    val cfg = Bench.Config(
+      sfDir = sf,
+      selected = Seq("boom", "one_row"),
+      extraQueries = Map("boom" -> boom,
+        "one_row" -> ((s: org.apache.spark.sql.SparkSession, _: String) => s.range(1).toDF())),
+      repeat = 1,
+      deadlineSec = 120.0,
+      baseCap = 30,
+      warmCodegen = false,
+      scaleOn = false, scale30On = false, scale100On = false,
+      scaleOracleOn = false,
+      scaledDirBase = sf,
+      detailPath = "unused.json")
+    val (full, summary) = Bench.run(spark, cfg)
+    val f = mapper.readTree(full)
+    val sm = mapper.readTree(summary)
+    val fd = f.get("failed_detail")
+    assert(fd.size == 1 && fd.get(0).get("name").asText == "boom", full)
+    assert(fd.get(0).get("msg").asText == msg, full)
+    assert(f.get("sf").asText == sf && sm.get("sf").asText == sf, summary)
+    assert(summary.length < 2000 && sm.get("failed").get(0).asText == "boom")
+  }
 }

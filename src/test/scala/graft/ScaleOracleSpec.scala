@@ -140,7 +140,13 @@ class ScaleOracleSpec extends SparkSpec {
       copies = 3, budgetSec = 1e9, deadlineLeft = () => 0.0)
     assert(starved.forall(r => r.status == "skip" && r.detail == "deadline"),
       starved.mkString("; "))
-    val json = ScaleOracle.toJson(3, starved, 0.1)
+    // a detail with a quote, a backslash, a newline, a tab and non-ASCII
+    // parses back equal
+    val detail = "law \"x\" at C:\\tmp\nline two\tcol \u2014 end"
+    val json = Json.write(ScaleOracle.section(3,
+      starved :+ ScaleOracle.Result("odd", "error", detail, 1.0), 0.1))
     assert(json.contains("\"skipped\":2"), json)
+    val parsed = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+    assert(parsed.get("results").get(2).get("detail").asText == detail, json)
   }
 }

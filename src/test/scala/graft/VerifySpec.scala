@@ -77,6 +77,20 @@ class VerifySpec extends SparkSpec {
     assert(log2.contains("[verify] 0 of 1 queries failed"), log2)
   }
 
+  test("failures.json and oracle_sql.json give back every string they were written with") {
+    import java.nio.file.{Files, Paths}
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    val out = Files.createTempDirectory("verify_report").toString
+    val msg = "org.x.Err: bad \"col\" at C:\\tmp\nline two\tcol \u2014 end"
+    Verify.writeReport(out, Seq("odd" -> msg))
+    val f = json.readTree(Files.readString(Paths.get(out, "failures.json")))
+    assert(f.size === 1 && f.get(0).get("name").asText === "odd", f.toString)
+    assert(f.get(0).get("message").asText === msg, f.toString)
+    val sql = json.readTree(Files.readString(Paths.get(out, "oracle_sql.json")))
+    assert(sql.size === SparkEntry.oracleSql.size)
+    SparkEntry.oracleSql.foreach { case (k, v) => assert(sql.get(k).asText === v, k) }
+  }
+
   test("normalizeTimestamps is identity on timestamp-free frames") {
     val df = Seq((1, "x", 2.0)).toDF("a", "b", "c")
     assert(Verify.normalizeTimestamps(df) eq df)
